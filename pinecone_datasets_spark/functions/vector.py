@@ -14,6 +14,15 @@ is native Spark:
 All built-in paths compute in ``double`` regardless of the (float32) input
 arrays: cross-engine reproducibility beats the 2× memory of the widened
 accumulator, and the accumulator is per-row scratch, not stored.
+
+Zero-vector guard: this module is the only one that knows the norm floor.
+Every cosine divides by EACH norm floored at ``NORM_FLOOR`` separately
+(never by the floored product — two tiny norms would multiply below the
+floor and shrink the score). A zero vector (failed embedding, padding)
+then scores 0.0 instead of raising DIVIDE_BY_ZERO under Spark's default
+ANSI mode, and for any norm above the floor the guard is the identity.
+Column callers score with ``cosine_from_norms``; NumPy callers normalize
+with ``unit_rows``.
 """
 
 from __future__ import annotations
@@ -27,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 ColumnOrName = Union[Column, str]
+
+NORM_FLOOR = 1e-30
 
 
 def _c(col: ColumnOrName) -> Column:
@@ -56,16 +67,26 @@ def l2_norm(a: ColumnOrName) -> Column:
     )
 
 
-def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
-    # greatest(norm, 1e-30): a zero vector (failed embedding, padding)
-    # must score 0.0, not raise DIVIDE_BY_ZERO under Spark 4's default
-    # ANSI mode and kill the job — the same guard the Arrow twin
-    # (make_batch_cosine_udf) has always applied; for any nonzero
-    # vector the guard is the identity, so scores are unchanged.
-    denom = F.greatest(l2_norm(a), F.lit(1e-30)) * F.greatest(
-        l2_norm(b), F.lit(1e-30)
+def cosine_from_norms(
+    a: ColumnOrName,
+    b: ColumnOrName,
+    a_norm: ColumnOrName,
+    b_norm: ColumnOrName,
+) -> Column:
+    """Cosine of ``a`` and ``b`` given their raw ``l2_norm`` columns.
+
+    Callers compute the norms once per row (before a pair join) and pass
+    them unguarded: each is floored at ``NORM_FLOOR`` here, so a zero
+    vector scores 0.0. Same double ops in the same order as
+    ``cosine_similarity``, so scores are bit-identical to it."""
+    return dot_product(a, b) / (
+        F.greatest(_c(a_norm), F.lit(NORM_FLOOR))
+        * F.greatest(_c(b_norm), F.lit(NORM_FLOOR))
     )
-    return dot_product(a, b) / denom
+
+
+def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
+    return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
 
 
 def l2_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -248,6 +269,14 @@ def dense_to_sparse(
 # ---------------------------------------------------------------------------
 
 
+def unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows of ``m`` scaled to unit length, each row norm floored at
+    ``NORM_FLOOR`` (a zero row stays zero)."""
+    return m / np.maximum(
+        np.linalg.norm(m, axis=1, keepdims=True), NORM_FLOOR
+    )
+
+
 def make_batch_dot_udf(query_matrix: np.ndarray):
     """Returns pandas_udf: array<float> column -> array<double> of scores
     against every row of ``query_matrix`` (shape (q, dim))."""
@@ -266,14 +295,13 @@ def make_batch_dot_udf(query_matrix: np.ndarray):
 
 def make_batch_cosine_udf(query_matrix: np.ndarray):
     q = np.ascontiguousarray(query_matrix, dtype=np.float64)
-    qn = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-30)
+    qn = unit_rows(q)
 
     @pandas_udf("array<double>")
     def batch_cosine(vecs: pd.Series) -> pd.Series:
         m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
         if len(m) == 0:
             return pd.Series([], dtype=object)
-        mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-        return pd.Series(list(mn @ qn.T))
+        return pd.Series(list(unit_rows(m) @ qn.T))
 
     return batch_cosine

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
+from ..functions.vector import unit_rows
 
 
 def _words(text_col: str) -> Column:
@@ -232,7 +233,7 @@ def maxcos_udf(bench_matrix, threshold: float):
     also stream-legal) and ``streaming/curate.py:semantic_gate``'s
     score-retaining variant."""
     q = np.asarray(bench_matrix, dtype=np.float64)
-    qn = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-30)
+    qn = unit_rows(q)
     thr = float(threshold)
 
     dim = q.shape[1]
@@ -262,10 +263,7 @@ def maxcos_udf(bench_matrix, threshold: float):
         n_ge = np.zeros(n, dtype=np.int64)
         if keep.any():
             m = np.asarray([m for m in mats if m is not None])
-            mn = m / np.maximum(
-                np.linalg.norm(m, axis=1, keepdims=True), 1e-30
-            )
-            sims = mn @ qn.T  # (kept, B)
+            sims = unit_rows(m) @ qn.T  # (kept, B)
             max_cos[keep] = sims.max(axis=1)
             n_ge[keep] = (sims >= thr).sum(axis=1).astype("int64")
         return pd.DataFrame({"max_cos": max_cos, "n_bench_ge": n_ge})

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
 from ..functions.text import doc_fingerprint
-from ..functions.vector import cosine_similarity, dot_product, l2_norm
+from ..functions.vector import cosine_from_norms, l2_norm
 from ..parallel import widen
 
 
@@ -788,20 +788,17 @@ def embedding_neardup_pairs(
 
     Norms are computed once per ROW before the pair join (guide §2.3:
     per-pair work drops from three interpreted 64-element folds — dot
-    + both norms — to one); the guarded product/division is the same
-    float expression cosine_similarity applies, on the same double
-    values, so scores are bit-identical.
+    + both norms — to one).
     """
-    guarded_norm = F.greatest(l2_norm(vector_col), F.lit(1e-30))
     left = df.select(
         F.col(id_col).alias("id_a"),
         F.col(vector_col).alias("_va"),
-        guarded_norm.alias("_na"),
+        l2_norm(vector_col).alias("_na"),
     )
     right = df.select(
         F.col(id_col).alias("id_b"),
         F.col(vector_col).alias("_vb"),
-        guarded_norm.alias("_nb"),
+        l2_norm(vector_col).alias("_nb"),
     )
     if candidates is not None:
         pairs = candidates.join(left, "id_a").join(right, "id_b")
@@ -809,8 +806,7 @@ def embedding_neardup_pairs(
         pairs = left.crossJoin(right).where(F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn(
-            "cosine",
-            dot_product("_va", "_vb") / (F.col("_na") * F.col("_nb")),
+            "cosine", cosine_from_norms("_va", "_vb", "_na", "_nb")
         )
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")

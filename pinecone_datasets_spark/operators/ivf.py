@@ -24,7 +24,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine_similarity, dot_product
+from ..functions.vector import (
+    NORM_FLOOR,
+    cosine_from_norms,
+    cosine_similarity,
+    dot_product,
+    l2_norm,
+    unit_rows,
+)
 
 
 def _sq_dists(m: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -77,17 +84,14 @@ def _nearest(
 def _assign_udf(centroids: np.ndarray, normalize: bool):
     """vec -> nearest-centroid id, one BLAS matmul per Arrow batch."""
     c = np.ascontiguousarray(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-30)
+    cn = unit_rows(c)
 
     def kernel(vecs: pd.Series) -> pd.Series:
         m = np.asarray([np.asarray(v, dtype=np.float64) for v in vecs])
         if len(m) == 0:
             return pd.Series([], dtype="int32")
         if normalize:
-            m = m / np.maximum(
-                np.linalg.norm(m, axis=1, keepdims=True), 1e-30
-            )
-            sims = m @ cn.T
+            sims = unit_rows(m) @ cn.T
             return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
         return pd.Series(_nearest(m, c).astype(np.int32))
 
@@ -219,7 +223,7 @@ def ivf_topk(
     codebook is sparse (bucket quantizers can have empty cells).
     """
     c = np.ascontiguousarray(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-30)
+    cn = unit_rows(c)
 
     # Centroid row i belongs to cell id cell_ids[i] (dense 0..n-1 by
     # default; sparse for bucket-quantizer codebooks with empty cells).
@@ -228,7 +232,9 @@ def ivf_topk(
     def probes(vec) -> list[int]:
         v = np.asarray(vec, dtype=np.float64)
         if metric == "cosine":
-            v = v / max(np.linalg.norm(v), 1e-30)
+            # 1-D norm on purpose: numpy takes the dot path here, not
+            # unit_rows' row reduction, and the last bit can differ
+            v = v / max(np.linalg.norm(v), NORM_FLOOR)
             # stable sort + ascending-cell tiebreak: the probe set is a
             # pure function of (query, codebook), replayable in SQL
             order = np.argsort(-(cn @ v), kind="stable")
@@ -268,19 +274,13 @@ def ivf_topk(
         # depends on one side only, so compute ||d|| once per corpus row
         # and ||q|| once per probe row BEFORE the join — a candidate
         # pair then pays ONE interpreted fold (the dot), not three.
-        # Identical double ops in the same order as cosine_similarity,
-        # so scores are bit-identical (q35's twin replays them).
-        from ..functions.vector import l2_norm
-
+        # q35's SQL twin replays these scores bit for bit.
         documents_with_cells = documents_with_cells.withColumn(
             "__dnorm", l2_norm(doc_vector_col)
         )
         q_exp = q_exp.withColumn("__qnorm", l2_norm(query_vector_col))
-        score = dot_product(
-            F.col(doc_vector_col), F.col(query_vector_col)
-        ) / (
-            F.greatest(F.col("__dnorm"), F.lit(1e-30))
-            * F.greatest(F.col("__qnorm"), F.lit(1e-30))
+        score = cosine_from_norms(
+            doc_vector_col, query_vector_col, "__dnorm", "__qnorm"
         )
     else:
         score = dot_product(doc_vector_col, query_vector_col)
@@ -450,10 +450,7 @@ def ivf_topk_inplan(
     )
     # Cosine factored exactly as ivf_topk/topk_search (r14): one
     # interpreted fold (the dot) per candidate pair instead of three;
-    # same double ops in the same order as cosine_similarity, so the
-    # scores the SQL oracle replays are bit-identical.
-    from ..functions.vector import dot_product, l2_norm
-
+    # the SQL oracle replays these scores bit for bit.
     docs_n = documents_with_cells.withColumn(
         "__dnorm", l2_norm(doc_vector_col)
     )
@@ -463,12 +460,8 @@ def ivf_topk_inplan(
     ).select(
         F.col(query_id_col),
         F.col(doc_id_col),
-        (
-            dot_product(F.col(doc_vector_col), F.col(query_vector_col))
-            / (
-                F.greatest(F.col("__dnorm"), F.lit(1e-30))
-                * F.greatest(F.col("__qnorm"), F.lit(1e-30))
-            )
+        cosine_from_norms(
+            doc_vector_col, query_vector_col, "__dnorm", "__qnorm"
         ).alias("score"),
     )
     w = Window.partitionBy(query_id_col).orderBy(

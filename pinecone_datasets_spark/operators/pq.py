@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
+from ..functions.vector import NORM_FLOOR, unit_rows
 from .ivf import _nearest, _sq_dists, assign_cells, train_centroids_local
 
 
@@ -243,7 +244,7 @@ def _adc_score_udf(
             rn = np.zeros(len(arr), dtype=np.float64)
             for j in range(m):
                 rn += norm2[j, arr[:, j]]
-            dots /= np.maximum(np.sqrt(rn), 1e-30)
+            dots /= np.maximum(np.sqrt(rn), NORM_FLOOR)
         return pd.Series(list(dots.T))
 
     return F.pandas_udf(kernel, ArrayType(DoubleType()))
@@ -266,9 +267,7 @@ def pq_topk(
     partial top-k."""
     q = np.asarray(query_matrix, dtype=np.float64)
     if metric == "cosine":
-        q = q / np.maximum(
-            np.linalg.norm(q, axis=1, keepdims=True), 1e-30
-        )
+        q = unit_rows(q)
         luts, norm2 = _adc_luts(codebooks, q)
     elif metric == "dot":
         luts, norm2 = _adc_luts(codebooks, q)
@@ -536,7 +535,7 @@ def _pair_score_udf(
             norms = norm_bias[pid].copy()
             for j in range(m):
                 norms += nluts[ci, j, arr[:, j]]
-            dots /= np.maximum(np.sqrt(np.maximum(norms, 0.0)), 1e-30)
+            dots /= np.maximum(np.sqrt(np.maximum(norms, 0.0)), NORM_FLOOR)
         return pd.Series(dots)
 
     return F.pandas_udf(kernel, DoubleType())
@@ -600,12 +599,8 @@ def ivfpq_index_topk(
         qmat = qmat @ meta["opq_rotation"]
     qn = qmat
     if metric == "cosine":
-        qn = qmat / np.maximum(
-            np.linalg.norm(qmat, axis=1, keepdims=True), 1e-30
-        )
-        cn = cents / np.maximum(
-            np.linalg.norm(cents, axis=1, keepdims=True), 1e-30
-        )
+        qn = unit_rows(qmat)
+        cn = unit_rows(cents)
         probe_order = np.argsort(-(qn @ cn.T), axis=1, kind="stable")
     else:
         d = _sq_dists(qmat, cents)

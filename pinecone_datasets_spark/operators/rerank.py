@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.vector import unit_rows
+
 
 def mmr_rerank(
     candidates: DataFrame,
@@ -94,11 +96,7 @@ def mmr_rerank(
         mat = np.stack(
             [np.asarray(v, dtype=np.float64) for v in pdf[vector_col]]
         )
-        if normalize:
-            norms = np.maximum(np.linalg.norm(mat, axis=1), 1e-30)
-            unit = mat / norms[:, None]
-        else:
-            unit = mat
+        unit = unit_rows(mat) if normalize else mat
         n = len(pdf)
         chosen: list[int] = []
         obj: list[float] = []

@@ -163,7 +163,7 @@ def _rescore(
     """Exact cosine over an already-candidate-filtered (query, doc) set:
     join the query vectors back (broadcast — queries are small), score
     once per surviving pair, windowed top-k with a literal bound."""
-    from ..functions.vector import dot_product, l2_norm
+    from ..functions.vector import cosine_from_norms, l2_norm
 
     scored = (
         cand_docs.withColumn("__dnorm", l2_norm(doc_vector_col))
@@ -179,14 +179,8 @@ def _rescore(
         .select(
             query_id_col,
             doc_id_col,
-            (
-                dot_product(F.col(doc_vector_col), F.col("__qvec"))
-                # greatest(·, 1e-30): a zero vector raised ANSI
-                # DIVIDE_BY_ZERO (identity for nonzero norms) — same
-                # guard as every other cosine path (r11 review)
-                / F.greatest(
-                    F.col("__dnorm") * F.col("__qnorm"), F.lit(1e-30)
-                )
+            cosine_from_norms(
+                doc_vector_col, "__qvec", "__dnorm", "__qnorm"
             ).alias("score"),
         )
     )

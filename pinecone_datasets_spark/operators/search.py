@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.filters import compile_filter
 from ..functions.vector import (
+    cosine_from_norms,
     cosine_similarity,
     dot_product,
     l2_distance,
@@ -142,19 +143,12 @@ def topk_search(
     # run interpreted, not codegen'd, so each fold on the N·Q hot path is
     # expensive. Norms depend on one side only — compute ||d|| once per
     # document and ||q|| once per query BEFORE the crossJoin, leaving a
-    # single fold (the dot) per pair instead of three. Same double ops in
-    # the same order as cosine_similarity, so scores are bit-identical.
+    # single fold (the dot) per pair instead of three.
     if metric == "cosine":
         docs = docs.withColumn("__dnorm", l2_norm(doc_vector_col))
         q = q.withColumn("__qnorm", l2_norm(query_vector_col))
-        # greatest(norm, 1e-30): zero vectors score 0.0 instead of
-        # raising DIVIDE_BY_ZERO under ANSI (same guard as the Arrow
-        # twin); identity for any nonzero vector.
-        score_col = dot_product(
-            F.col(doc_vector_col), F.col(query_vector_col)
-        ) / (
-            F.greatest(F.col("__dnorm"), F.lit(1e-30))
-            * F.greatest(F.col("__qnorm"), F.lit(1e-30))
+        score_col = cosine_from_norms(
+            doc_vector_col, query_vector_col, "__dnorm", "__qnorm"
         )
     else:
         score_col = _score(
@@ -516,12 +510,8 @@ def ann_lsh_topk(
         .select(
             F.col(query_id_col),
             F.col(doc_id_col),
-            (
-                dot_product(doc_vector_col, query_vector_col)
-                / (
-                    F.greatest(F.col("_dnorm"), F.lit(1e-30))
-                    * F.greatest(F.col("_qnorm"), F.lit(1e-30))
-                )
+            cosine_from_norms(
+                doc_vector_col, query_vector_col, "_dnorm", "_qnorm"
             ).alias("score"),
         )
         .groupBy(query_id_col, doc_id_col)
@@ -822,13 +812,9 @@ def lsh_index_topk(
         .select(
             F.col(query_id_col),
             F.col(id_col),
-            (
-                dot_product("vector", "_qvec")
-                / (
-                    F.greatest(F.col("norm"), F.lit(1e-30))
-                    * F.greatest(F.col("_qnorm"), F.lit(1e-30))
-                )
-            ).alias("score"),
+            cosine_from_norms("vector", "_qvec", "norm", "_qnorm").alias(
+                "score"
+            ),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(

@@ -170,7 +170,7 @@ def semantic_dedup_pairs(
                 f"{max_cell_rows} ({detail}); raise bits (cells halve "
                 "per bit) or retrain the cell codebook"
             )
-    from ..functions.vector import dot_product, l2_norm
+    from ..functions.vector import cosine_from_norms, l2_norm
 
     # Score INSIDE the cell-keyed self-join (guide §8: decide/score
     # where the payload already is, move big rows once). The former
@@ -183,10 +183,9 @@ def semantic_dedup_pairs(
     # scores each pair in the cell-partitioned SMJ stage, and the
     # per-row norm means one interpreted fold per pair (the dot), not
     # three. Same pairs, same double arithmetic → scores bit-identical.
-    guarded_norm = F.greatest(l2_norm(vector_col), F.lit(1e-30))
     cells = df.select(
         F.col(id_col), F.col(cell_col), F.col(vector_col)
-    ).withColumn("__n", guarded_norm)
+    ).withColumn("__n", l2_norm(vector_col))
     # Pin the cell exchange to the configured shuffle parallelism: the
     # bytes AQE coalesces on are PRE-expansion (N rows), so it happily
     # merges the whole corpus into a couple of partitions and the
@@ -220,10 +219,7 @@ def semantic_dedup_pairs(
             (F.col("__ca") == F.col("__cb"))
             & (F.col("id_a") < F.col("id_b")),
         )
-        .withColumn(
-            "cosine",
-            dot_product("_va", "_vb") / (F.col("_na") * F.col("_nb")),
-        )
+        .withColumn("cosine", cosine_from_norms("_va", "_vb", "_na", "_nb"))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

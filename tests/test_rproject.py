@@ -134,7 +134,9 @@ def test_projected_topk_validates_candidates(spark, emb_frames):
 def test_project_vectors_null_and_rescore_zero_vector(spark):
     """r11 review: a NULL vector cell crashed np.stack in the
     projection kernel, and a zero vector in the rescore stage raised
-    ANSI DIVIDE_BY_ZERO (the guard every other cosine path has)."""
+    ANSI DIVIDE_BY_ZERO (the guard every other cosine path has). Each
+    norm is floored on its own: two 1e-16 vectors are parallel, though
+    the product of their norms (1e-32) is below the floor."""
     from pinecone_datasets_spark.operators.rproject import (
         project_vectors,
         projected_topk,
@@ -145,6 +147,7 @@ def test_project_vectors_null_and_rescore_zero_vector(spark):
         (2, [0.0, 1.0, 0.0, 0.0]),
         (3, None),
         (4, [0.0, 0.0, 0.0, 0.0]),  # zero vector
+        (5, [1e-16, 0.0, 0.0, 0.0]),  # tiny vector
     ]
     df = spark.createDataFrame(rows, "id long, values array<double>")
     proj = {
@@ -154,11 +157,16 @@ def test_project_vectors_null_and_rescore_zero_vector(spark):
     assert proj[3] is None and len(proj[1]) == 2
 
     q = spark.createDataFrame(
-        [(10, [1.0, 0.0, 0.0, 0.0])], "query_id long, vector array<double>"
+        [(10, [1.0, 0.0, 0.0, 0.0]), (11, [1e-16, 0.0, 0.0, 0.0])],
+        "query_id long, vector array<double>",
     )
     out = projected_topk(
         df.where(F.col("values").isNotNull()), q, k=2, candidates=3,
         dim=4, out_dim=2,
     ).collect()
-    assert len(out) == 2  # no crash; zero vector scored, not fatal
-    assert out[0]["id"] == 1  # self-match ranks first
+    by_q: dict = {}
+    for r in sorted(out, key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(r["query_id"], []).append(r)
+    assert len(by_q[10]) == 2  # no crash; zero vector scored, not fatal
+    assert by_q[10][0]["id"] == 1  # self-match ranks first
+    assert {r["id"]: r["score"] for r in by_q[11]}[5] == 1.0

@@ -216,6 +216,159 @@ def test_zero_vector_scores_zero_not_divide_by_zero(spark):
     assert got["d0"] == pytest.approx(0.0)
 
 
+# Vectors that stress the norm floor: a zero vector, a tiny one whose
+# squared norm (1e-32) is below the floor, and ordinary ones.
+_GUARD_DOCS = [
+    ("d0", [0.0, 0.0, 0.0, 0.0]),
+    ("d1", [1e-16, 0.0, 0.0, 0.0]),
+    ("d2", [1.0, 0.5, -0.25, 2.0]),
+    ("d3", [-3.0, 1.0, 0.0, 0.5]),
+    ("d4", [0.1, 0.2, 0.3, 0.4]),
+]
+_GUARD_QUERIES = [
+    ("q0", [0.0, 0.0, 0.0, 0.0]),
+    ("q1", [1e-16, 0.0, 0.0, 0.0]),
+    ("q2", [0.5, -1.0, 2.0, 0.25]),
+]
+
+
+def _guard_topk_search(spark, docs, qs, tmp_path):
+    return topk_search(
+        docs, qs, metric="cosine", k=len(_GUARD_DOCS), metadata_col=None
+    )
+
+
+def _guard_ivf_topk(spark, docs, qs, tmp_path):
+    from pinecone_datasets_spark.operators.ivf import assign_cells, ivf_topk
+
+    cents = np.array([[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 1.0]])
+    return ivf_topk(
+        assign_cells(docs, cents), qs, cents, k=len(_GUARD_DOCS), nprobe=2
+    )
+
+
+def _guard_ivf_topk_inplan(spark, docs, qs, tmp_path):
+    from pinecone_datasets_spark.operators.ivf import (
+        assign_cells,
+        ivf_topk_inplan,
+    )
+
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0, 1.0])]
+    return ivf_topk_inplan(
+        assign_cells(docs, np.array([c for _, c in cents])),
+        qs,
+        cents,
+        k=len(_GUARD_DOCS),
+        nprobe=2,
+    )
+
+
+def _guard_ann_lsh_topk(spark, docs, qs, tmp_path):
+    return ann_lsh_topk(
+        docs, qs, k=len(_GUARD_DOCS), bands=4, bits=2, dim=4, seed=1
+    )
+
+
+def _guard_lsh_index_topk(spark, docs, qs, tmp_path):
+    from pinecone_datasets_spark.operators.search import (
+        build_lsh_index,
+        lsh_index_topk,
+    )
+
+    path = str(tmp_path / "lsh")
+    build_lsh_index(docs, path, bands=4, bits=2, dim=4, seed=1)
+    return lsh_index_topk(spark, path, qs, k=len(_GUARD_DOCS))
+
+
+def _guard_projected_topk(spark, docs, qs, tmp_path):
+    from pinecone_datasets_spark.operators.rproject import projected_topk
+
+    n = len(_GUARD_DOCS)
+    return projected_topk(docs, qs, k=n, candidates=n, dim=4, out_dim=2)
+
+
+def _guard_embedding_neardup_pairs(spark, docs, qs, tmp_path):
+    from pinecone_datasets_spark.operators.dedup import (
+        embedding_neardup_pairs,
+    )
+
+    return embedding_neardup_pairs(
+        docs, threshold=-1.0, id_col="id", vector_col="values"
+    )
+
+
+def _guard_semantic_dedup_pairs(spark, docs, qs, tmp_path):
+    from pinecone_datasets_spark.operators.semdedup import (
+        semantic_dedup_pairs,
+    )
+
+    return semantic_dedup_pairs(
+        docs.withColumn("cell", F.lit(0)),
+        threshold=-1.0,
+        id_col="id",
+        vector_col="values",
+        cell_col="cell",
+    )
+
+
+@pytest.mark.parametrize(
+    "path",
+    [
+        _guard_topk_search,
+        _guard_ivf_topk,
+        _guard_ivf_topk_inplan,
+        _guard_ann_lsh_topk,
+        _guard_lsh_index_topk,
+        _guard_projected_topk,
+        _guard_embedding_neardup_pairs,
+        _guard_semantic_dedup_pairs,
+    ],
+    ids=lambda f: f.__name__[len("_guard_"):],
+)
+def test_cosine_paths_equal_cosine_similarity_exactly(spark, tmp_path, path):
+    """Every cosine path scores a pair bit-identically to
+    ``cosine_similarity`` on the same two vectors (``==``, not approx),
+    and a zero vector scores exactly 0.0."""
+    from pinecone_datasets_spark.functions.vector import cosine_similarity
+
+    docs = spark.createDataFrame(
+        _GUARD_DOCS, "id string, values array<double>"
+    )
+    qs = spark.createDataFrame(
+        _GUARD_QUERIES, "query_id string, vector array<double>"
+    )
+    out = path(spark, docs, qs, tmp_path)
+    # (a side, b side) of each scored pair, keyed as id_a / id_b
+    if "cosine" in out.columns:  # pair frames: (id_a, id_b, cosine)
+        a_vecs, b_vecs = docs, docs
+        pairs = out.select("id_a", "id_b", F.col("cosine").alias("score"))
+    else:  # top-k frames: (query_id, id, score, rank)
+        a_vecs = qs.select("query_id", F.col("vector").alias("values"))
+        b_vecs = docs
+        pairs = out.select(
+            F.col("query_id").alias("id_a"),
+            F.col("id").alias("id_b"),
+            "score",
+        )
+    rows = (
+        pairs.join(a_vecs.toDF("id_a", "a"), "id_a")
+        .join(b_vecs.toDF("id_b", "b"), "id_b")
+        .select(
+            "id_a", "id_b", "score", cosine_similarity("a", "b").alias("ref")
+        )
+        .collect()
+    )
+    assert rows
+    for r in rows:
+        assert r["score"] == r["ref"], (r["id_a"], r["id_b"])
+    zero = [
+        r["score"]
+        for r in rows
+        if {r["id_a"], r["id_b"]} & {"q0", "d0"}
+    ]
+    assert zero and all(z == 0.0 for z in zero)
+
+
 def test_null_top_k_defaults_to_five(spark):
     """A NULL top_k cell must back-fill the declared default (5) like a
     missing column does — rank <= NULL silently returned ZERO rows for

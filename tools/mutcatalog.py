@@ -40,6 +40,7 @@ TEXT = "pinecone_datasets_spark/functions/text.py"
 FILTERS = "pinecone_datasets_spark/functions/filters.py"
 TIMESERIES = "pinecone_datasets_spark/operators/timeseries.py"
 DEDUP = "pinecone_datasets_spark/operators/dedup.py"
+VECTOR = "pinecone_datasets_spark/functions/vector.py"
 
 MUTATIONS: list[Mut] = [
     # ---------------------------------------------------------- q01
@@ -343,8 +344,8 @@ MUTATIONS += [
     Mut(
         key="q19_q20_topk_metrics",
         name="qnorm_dropped",
-        path=SEARCH,
-        old="* F.greatest(F.col(\"__qnorm\"), F.lit(1e-30))",
+        path=VECTOR,
+        old="* F.greatest(_c(b_norm), F.lit(NORM_FLOOR))",
         new="* F.lit(1.0)",
     ),
     Mut(
@@ -1347,9 +1348,9 @@ MUTATIONS += [
     Mut(
         key="q19_q20_topk_metrics",
         name="lib_norm_swap",
-        path=SEARCH,
-        old='F.greatest(F.col("__qnorm"), F.lit(1e-30))',
-        new='F.greatest(F.col("__dnorm"), F.lit(1e-30))',
+        path=VECTOR,
+        old="F.greatest(_c(b_norm), F.lit(NORM_FLOOR))",
+        new="F.greatest(_c(a_norm), F.lit(NORM_FLOOR))",
     ),
     # ---------------------------------------------- keyword.py
     Mut(
