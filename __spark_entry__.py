@@ -908,7 +908,7 @@ def q30_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Stored-filter search (the pandas-UDF interpreter path) + sparse vectors
+# Stored-filter search (compiled per-query filters) + sparse vectors
 # ---------------------------------------------------------------------------
 
 
@@ -916,8 +916,7 @@ def q31_stored_filter_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay queries whose Pinecone filters live in the table itself.
     The distinct stored filters are compiled into one native CASE-chain
     predicate (operators/search.py:_compiled_stored_filter_predicate) —
-    no Python evaluator in the plan; the Arrow-UDF interpreter survives
-    only as an explicit fallback mode."""
+    no Python evaluator in the plan."""
     import json
 
     emb = _t(spark, sf_dir, "embeddings")

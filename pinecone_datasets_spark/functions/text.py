@@ -53,14 +53,6 @@ def punct_ratio(text: ColumnOrName) -> Column:
     )
 
 
-def uppercase_ratio(text: ColumnOrName) -> Column:
-    t = _c(text)
-    stripped = F.regexp_replace(t, "[A-Z]", "")
-    return (F.length(t) - F.length(stripped)) / F.greatest(
-        F.length(t), F.lit(1)
-    )
-
-
 _STOPWORDS = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it",
     "that", "for", "on", "with", "as", "was", "at", "by", "be",

@@ -131,14 +131,6 @@ def char_shingles(text: Column, k: int = 5) -> Column:
     )
 
 
-def _attr_shingles(norm_attr: Column, k: int, distinct: bool = True) -> Column:
-    """char_shingles over a pre-materialized normalized-text attribute."""
-    n = F.length(norm_attr)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    sh = F.transform(idx, lambda i: F.substring(norm_attr, i, k))
-    return F.array_distinct(sh) if distinct else sh
-
-
 def _norm_shingled(
     df: DataFrame, text_col: str, id_col: str, k: int, distinct: bool = True
 ) -> DataFrame:
@@ -236,16 +228,6 @@ def _rolling_hashed(
         F.col(id_col),
         F.explode_outer(F.transform(idx, window_hash)).alias("_h"),
     ).where(F.col("_h").isNotNull())
-
-
-def _shingle_hash(shingle: Column, seed: int, hash_fn: str) -> Column:
-    if hash_fn == "xxhash64":
-        return F.xxhash64(shingle, F.lit(seed))
-    if hash_fn == "md5":
-        # Portable: min over md5-hex strings is a lexicographic min any SQL
-        # engine reproduces exactly.
-        return F.md5(F.concat(F.lit(f"{seed}|"), shingle))
-    raise ValueError(f"unknown hash_fn: {hash_fn}")
 
 
 # Affine universal-hash family for the xxhash64 fast path: a 32-bit base

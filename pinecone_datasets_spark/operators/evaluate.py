@@ -27,8 +27,10 @@ recall certificates in ``__spark_entry__._recall_certificate``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .sampling import cap_per_group
 
 
 def retrieval_metrics(
@@ -76,10 +78,10 @@ def retrieval_metrics(
         )
     )
     # Ideal DCG: the query's own judgments, best-first, truncated at k.
-    w = Window.partitionBy(qid).orderBy(F.desc("_rel"), F.col(did))
     ideal = (
-        judged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
+        cap_per_group(
+            judged, qid, k, [F.desc("_rel"), F.col(did)], rank_col="_rn"
+        )
         .groupBy(qid)
         .agg(
             F.sum(

@@ -21,7 +21,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import (
@@ -32,6 +32,7 @@ from ..functions.vector import (
     l2_norm,
     unit_rows,
 )
+from .sampling import cap_per_group
 
 
 def _sq_dists(m: np.ndarray, c: np.ndarray) -> np.ndarray:
@@ -291,12 +292,12 @@ def ivf_topk(
         F.col(doc_id_col),
         score.alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return cap_per_group(
+        candidates,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )
 
 
@@ -430,23 +431,24 @@ def ivf_topk_inplan(
     final scoring and a SQL oracle can replay the probe sets exactly."""
     spark = documents_with_cells.sparkSession
     cdf = spark.createDataFrame(cents, "cell int, cvec array<double>")
-    w_probe = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__sim"), F.col("cell")
-    )
-    probe = (
+    sims = (
         queries.select(query_id_col, query_vector_col)
         .crossJoin(F.broadcast(cdf))
         .withColumn(
             "__sim",
             cosine_similarity(F.col(query_vector_col), F.col("cvec")),
         )
-        .withColumn("__pr", F.row_number().over(w_probe))
-        .where(F.col("__pr") <= F.lit(int(nprobe)))
-        .select(
-            query_id_col,
-            query_vector_col,
-            F.col("cell").alias(cell_col),
-        )
+    )
+    probe = cap_per_group(
+        sims,
+        query_id_col,
+        nprobe,
+        [F.desc("__sim"), F.col("cell")],
+        rank_col="__pr",
+    ).select(
+        query_id_col,
+        query_vector_col,
+        F.col("cell").alias(cell_col),
     )
     # Cosine factored exactly as ivf_topk/topk_search (r14): one
     # interpreted fold (the dot) per candidate pair instead of three;
@@ -464,11 +466,12 @@ def ivf_topk_inplan(
             doc_vector_col, query_vector_col, "__dnorm", "__qnorm"
         ).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return candidates.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= F.lit(int(k))
+    return cap_per_group(
+        candidates,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )
 
 

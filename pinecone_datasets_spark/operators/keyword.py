@@ -34,10 +34,11 @@ BM25 formula (Robertson/Sparck Jones, the Lucene variant):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
+from .sampling import cap_per_group
 
 
 def _tokens(text_col: str) -> "F.Column":
@@ -156,14 +157,13 @@ def bm25_topk(
     scored = _bm25_scores(
         tf, dl, stats, qterms, k1, b, query_id_col, id_col
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round("score", 6).desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(k))
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return cap_per_group(
+        scored,
+        query_id_col,
+        k,
+        [F.round("score", 6).desc(), F.col(id_col)],
+        rank_col="rank",
+    ).select(query_id_col, id_col, "score", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -364,14 +364,13 @@ def bm25_index_topk(
         .groupBy(query_id_col, id_col)
         .agg(F.sum("contrib").alias("score"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round("score", 6).desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(k))
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return cap_per_group(
+        scored,
+        query_id_col,
+        k,
+        [F.round("score", 6).desc(), F.col(id_col)],
+        rank_col="rank",
+    ).select(query_id_col, id_col, "score", "rank")
 
 
 def rrf_fuse(
@@ -403,11 +402,10 @@ def rrf_fuse(
     fused = unioned.groupBy(query_id_col, id_col).agg(
         F.sum("part").alias("rrf_score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round("rrf_score", 9).desc(), F.col(id_col)
-    )
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(topk))
-        .select(query_id_col, id_col, "rrf_score", "rank")
-    )
+    return cap_per_group(
+        fused,
+        query_id_col,
+        topk,
+        [F.round("rrf_score", 9).desc(), F.col(id_col)],
+        rank_col="rank",
+    ).select(query_id_col, id_col, "rrf_score", "rank")

@@ -39,11 +39,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot_product
 from ..parallel import widen
+from .sampling import cap_per_group
 
 
 def maxsim_score(doc_tokens, query_tokens) -> Column:
@@ -102,14 +103,13 @@ def maxsim_topk(
             ),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(int(k)))
-        .select(query_id_col, doc_id_col, "score", "rank")
-    )
+    return cap_per_group(
+        scored,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
+    ).select(query_id_col, doc_id_col, "score", "rank")
 
 
 def _maxsim_batch_udf(query_tokens: list, dim: int):
@@ -192,11 +192,10 @@ def maxsim_topk_arrow(
     qid = F.element_at(F.lit(list(query_ids)), F.col("_qidx") + 1).alias(
         "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return (
-        scored.select(qid, F.col(doc_id_col), F.col("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(int(k)))
+    return cap_per_group(
+        scored.select(qid, F.col(doc_id_col), F.col("score")),
+        "query_id",
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )

@@ -36,9 +36,10 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import cap_per_group
 from .search import Metric, _score, topk_search
 
 
@@ -105,14 +106,13 @@ def mine_hard_negatives(
     negs = candidates.join(
         F.broadcast(pos_pairs), [query_id_col, doc_id_col], "left_anti"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    negs = (
-        negs.withColumn("neg_rank", F.row_number().over(w))
-        .where(F.col("neg_rank") <= F.lit(int(k)))
-        .select(query_id_col, doc_id_col, "score", "neg_rank")
-    )
+    negs = cap_per_group(
+        negs,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="neg_rank",
+    ).select(query_id_col, doc_id_col, "score", "neg_rank")
     # Exact positive scores: broadcast the labeled pairs onto the corpus
     # scan (map-only probe), then attach the query vectors (broadcast).
     pos_scored = (

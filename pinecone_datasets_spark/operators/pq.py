@@ -42,12 +42,13 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from ..functions.vector import NORM_FLOOR, unit_rows
 from .ivf import _nearest, _sq_dists, assign_cells, train_centroids_local
+from .sampling import cap_per_group
 
 
 def _lloyd(m: np.ndarray, k: int, seed: int, max_iter: int) -> np.ndarray:
@@ -285,13 +286,12 @@ def pq_topk(
     qid = F.element_at(F.lit(list(query_ids)), F.col("_qidx") + 1).alias(
         "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return (
-        scored.select(qid, F.col(doc_id_col), F.col("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return cap_per_group(
+        scored.select(qid, F.col(doc_id_col), F.col("score")),
+        "query_id",
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )
 
 
@@ -675,19 +675,16 @@ def ivfpq_index_topk(
             pair_qi, pair_ci_arr,
         )(F.col(code_col), F.col("_pair")).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    ranked = scored.withColumn("rank", F.row_number().over(w))
+    order = [F.desc("score"), F.col(doc_id_col)]
     if refine is None:
-        return ranked.where(F.col("rank") <= k)
+        return cap_per_group(scored, query_id_col, k, order, rank_col="rank")
     if documents is None:
         raise ValueError("refine requires the documents frame")
     from ..functions.vector import cosine_similarity, dot_product
 
-    shortlist = ranked.where(F.col("rank") <= int(refine) * k).drop(
-        "rank", "score"
-    )
+    shortlist = cap_per_group(
+        scored, query_id_col, int(refine) * k, order, rank_col="rank"
+    ).drop("rank", "score")
     # the column the index was built from (pre-OPQ name); older
     # sidecars lack the key, for which "values" was the only choice
     doc_vec_col = meta.get("vector_col", "values")
@@ -707,9 +704,7 @@ def ivfpq_index_topk(
             ).alias("score"),
         )
     )
-    return exact.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return cap_per_group(exact, query_id_col, k, order, rank_col="rank")
 
 
 def train_pq_inplan(

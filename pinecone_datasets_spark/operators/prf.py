@@ -42,6 +42,7 @@ from .keyword import (
     _tf_frames,
     _tokens,
 )
+from .sampling import cap_per_group
 
 # Above this many values, a literal IN list stops being a cheap pushed
 # scan filter and starts bloating the Catalyst plan (large query sets:
@@ -117,11 +118,8 @@ def _rm3_model_from_frames(
         .distinct()
     )
     scored = _bm25_scores(tf, dl, stats, qterms, k1, b, qid, id_col)
-    wfb = Window.partitionBy(qid).orderBy(
-        F.round("score", 6).desc(), F.col(id_col)
-    )
-    fb = scored.withColumn("_rk", F.row_number().over(wfb)).where(
-        F.col("_rk") <= fb_k
+    fb = cap_per_group(
+        scored, qid, fb_k, [F.round("score", 6).desc(), F.col(id_col)]
     )
     wq = Window.partitionBy(qid)
     pdq = fb.select(
@@ -175,9 +173,8 @@ def _interpolate_model(
     the RM3 step shared by the in-plan and persisted-index paths."""
     qid = query_id_col
     wq = Window.partitionBy(qid)
-    wr = Window.partitionBy(qid).orderBy(F.desc("_w"), F.col("term"))
-    top = rel.withColumn("_rn", F.row_number().over(wr)).where(
-        F.col("_rn") <= n_terms
+    top = cap_per_group(
+        rel, qid, n_terms, [F.desc("_w"), F.col("term")], rank_col="_rn"
     )
     expn = top.select(
         qid,
@@ -252,14 +249,13 @@ def _weighted_rank_from_frames(
         tf, dl, stats, query_terms, k1, b, query_id_col, id_col,
         weighted=True,
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round("score", 6).desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(k))
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return cap_per_group(
+        scored,
+        query_id_col,
+        k,
+        [F.round("score", 6).desc(), F.col(id_col)],
+        rank_col="rank",
+    ).select(query_id_col, id_col, "score", "rank")
 
 
 def rm3_search(
@@ -446,11 +442,10 @@ def rm3_index_search(
         .groupBy(qid, id_col)
         .agg(F.sum("contrib").alias("score"))
     )
-    w = Window.partitionBy(qid).orderBy(
-        F.round("score", 6).desc(), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(k))
-        .select(qid, id_col, "score", "rank")
-    )
+    return cap_per_group(
+        scored,
+        qid,
+        k,
+        [F.round("score", 6).desc(), F.col(id_col)],
+        rank_col="rank",
+    ).select(qid, id_col, "score", "rank")

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.vector import unit_rows
+from .sampling import cap_per_group
 
 
 def mmr_rerank(
@@ -245,20 +246,17 @@ def crossencoder_rerank(
     scored = pairs.mapInPandas(
         kernel, _xe_schema(pairs, query_id_col, doc_id_col)
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("xe_score"), F.col("doc_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(int(k)))
-        .select(
-            F.col("query_id").alias(query_id_col),
-            F.col("doc_id").alias(doc_id_col),
-            "xe_score",
-            "rank",
-        )
+    return cap_per_group(
+        scored,
+        "query_id",
+        k,
+        [F.desc("xe_score"), F.col("doc_id")],
+        rank_col="rank",
+    ).select(
+        F.col("query_id").alias(query_id_col),
+        F.col("doc_id").alias(doc_id_col),
+        "xe_score",
+        "rank",
     )
 
 

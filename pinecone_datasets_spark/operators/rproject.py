@@ -38,10 +38,11 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from .sampling import cap_per_group
 from .search import topk_search
 
 
@@ -162,7 +163,7 @@ def _rescore(
 ) -> DataFrame:
     """Exact cosine over an already-candidate-filtered (query, doc) set:
     join the query vectors back (broadcast — queries are small), score
-    once per surviving pair, windowed top-k with a literal bound."""
+    once per surviving pair, top-k per query."""
     from ..functions.vector import cosine_from_norms, l2_norm
 
     scored = (
@@ -184,9 +185,10 @@ def _rescore(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= F.lit(int(k))
+    return cap_per_group(
+        scored,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )

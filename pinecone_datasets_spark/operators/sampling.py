@@ -287,15 +287,21 @@ def cap_per_group(
     order_by: Sequence[Column],
     rank_col: Optional[str] = None,
 ) -> DataFrame:
-    """Keep at most ``n`` rows per group, best-first by ``order_by``
-    (e.g. cap documents per source domain, keeping the highest-quality
-    ones — the standard anti-domination gate in corpus curation).
+    """Keep at most ``n`` rows per group, best-first by ``order_by`` —
+    the library's one per-group top-k cut: every per-query top-k
+    operator (vector, keyword, fusion, rerank) and every per-group cap
+    (domains, samplers) ends here.
 
-    ``n`` is a literal, so the plan gets a ``WindowGroupLimit``: every
-    map task truncates each group to n rows *before* the exchange and
-    the shuffle moves at most n rows per (task, group). ``order_by``
-    must be a total order (append a unique id as tiebreak) or the kept
-    set is nondeterministic.
+    * The rank is ``row_number``, never ``rank``/``dense_rank``: a tie
+      cannot push a group past ``n`` rows.
+    * ``n`` is a literal, so Spark plans a ``WindowGroupLimit``: every
+      map task truncates each group to n rows *before* the exchange and
+      the shuffle moves at most n rows per (task, group).
+    * ``order_by`` must be a total order — end it with a unique id — or
+      the kept set and the ranks are nondeterministic.
+
+    ``rank_col`` keeps the 1-based rank under that name; without it the
+    rank is dropped. ``n <= 0`` raises ``ValueError``.
     """
     from pyspark.sql import Window
 
@@ -303,11 +309,11 @@ def cap_per_group(
         raise ValueError(f"n must be positive: {n}")
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     w = Window.partitionBy(*groups).orderBy(*order_by)
-    ranked = df.withColumn("_rk", F.row_number().over(w))
-    kept = ranked.where(F.col("_rk") <= F.lit(int(n)))
-    if rank_col:
-        return kept.withColumnRenamed("_rk", rank_col)
-    return kept.drop("_rk")
+    rk = rank_col or "_rk"
+    kept = df.withColumn(rk, F.row_number().over(w)).where(
+        F.col(rk) <= F.lit(int(n))
+    )
+    return kept if rank_col else kept.drop(rk)
 
 
 def stratified_sample_exact(

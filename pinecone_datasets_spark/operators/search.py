@@ -9,10 +9,10 @@ execution to the Pinecone index. Here they are Spark plans:
   ``TakeOrderedAndProject`` — per-partition partial top-k, only k rows per
   partition cross the wire. This is the shape that survives 100 TB.
 * ``topk_search``: replay a whole queries table → broadcast the (small)
-  queries side, crossJoin, score, then per-query
-  ``row_number() OVER (PARTITION BY query ORDER BY score DESC) <= top_k``.
-  Spark ≥3.5 inserts ``WindowGroupLimit`` (partial top-k before the
-  shuffle), so the full cross product never materializes post-shuffle.
+  queries side, crossJoin, score, then the per-query top-k cut of
+  ``sampling.cap_per_group`` (``WindowGroupLimit``: partial top-k before
+  the shuffle), so the full cross product never materializes
+  post-shuffle.
 * ``ann_lsh_topk``: the approximate scale path — random-hyperplane LSH
   (signed projections, banded) to bucket candidates, exact re-score inside
   buckets. Turns O(N·Q) into O(candidates) with one shuffle join on
@@ -26,7 +26,7 @@ from typing import Any, Mapping, Optional, Union
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.filters import compile_filter
@@ -38,6 +38,7 @@ from ..functions.vector import (
     l2_norm,
 )
 from ..parallel import widen
+from .sampling import cap_per_group
 
 Metric = str  # "dot" | "cosine" | "euclidean"
 
@@ -90,7 +91,6 @@ def topk_search(
     query_vector_col: str = "vector",
     metadata_col: Optional[str] = "metadata",
     apply_stored_filters: bool = False,
-    stored_filter_mode: str = "compile",
 ) -> DataFrame:
     """Replay a queries table: per-query top-k over documents.
 
@@ -101,15 +101,12 @@ def topk_search(
     partial-top-k (WindowGroupLimit) caps what the single shuffle carries.
 
     ``apply_stored_filters=True`` applies each query's stored Pinecone
-    ``filter`` JSON to the documents' ``metadata``. Default mode
-    (``stored_filter_mode="compile"``) collects the DISTINCT filter
-    strings from the small queries side on the driver, compiles each via
-    ``functions.filters.compile_filter``, and pushes one native CASE chain
-    before scoring — the whole predicate stays inside whole-stage codegen;
-    no Python crosses the N·Q hot path. ``"interpret"`` keeps the
-    Arrow-batched pandas-UDF interpreter (one kernel call per batch) as an
-    explicit fallback for debugging/regression comparison. A malformed
-    stored filter raises in BOTH modes.
+    ``filter`` JSON to the documents' ``metadata``: the DISTINCT filter
+    strings are collected from the small queries side on the driver,
+    each is compiled via ``functions.filters.compile_filter``, and one
+    native CASE chain is pushed before scoring — the whole predicate
+    stays inside whole-stage codegen; no Python crosses the N·Q hot
+    path. A malformed stored filter raises ``ValueError``.
     """
     q = queries
     if k is not None:
@@ -171,19 +168,10 @@ def topk_search(
         raise ValueError(
             f"apply_stored_filters=True but {missing}"
         )
-    if apply_stored_filters and metadata_col is not None and "filter" in q.columns:
-        if stored_filter_mode == "compile":
-            joined = joined.where(
-                _compiled_stored_filter_predicate(q, metadata_col)
-            )
-        elif stored_filter_mode == "interpret":
-            joined = joined.where(
-                _matches_filter_udf(F.col(metadata_col), F.col("filter"))
-            )
-        else:
-            raise ValueError(
-                f"unknown stored_filter_mode: {stored_filter_mode!r}"
-            )
+    if apply_stored_filters:
+        joined = joined.where(
+            _compiled_stored_filter_predicate(q, metadata_col)
+        )
 
     scored = joined.select(
         F.col(query_id_col),
@@ -191,17 +179,15 @@ def topk_search(
         score_col.alias("score"),
         F.col("top_k"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        # The literal conjunct enables WindowGroupLimit's partial top-k;
-        # the per-row conjunct refines it to each query's own top_k.
-        .where(
-            (F.col("rank") <= F.lit(max_k))
-            & (F.col("rank") <= F.col("top_k"))
+        cap_per_group(
+            scored,
+            query_id_col,
+            max_k,
+            [F.desc("score"), F.col(doc_id_col)],
+            rank_col="rank",
         )
+        .where(F.col("rank") <= F.col("top_k"))
         .drop("top_k")
     )
 
@@ -240,50 +226,6 @@ def _compiled_stored_filter_predicate(
     return expr.otherwise(F.lit(False))
 
 
-def _matches_filter_series(metadata: pd.Series, filt: pd.Series) -> pd.Series:
-    def match(m: Optional[str], f: Optional[str]) -> bool:
-        if f is None or f == "":
-            return True
-        try:
-            fd = json.loads(f)
-        except (TypeError, ValueError) as e:
-            # Same contract as the compiled path: a corrupt stored filter
-            # is an error, not silently match-everything.
-            raise ValueError(f"Malformed stored filter JSON: {f!r}") from e
-        if fd is None:
-            # the string 'null' parses to None: same as no filter
-            # (compiled path: null/empty filter matches everything)
-            return True
-        if not isinstance(fd, Mapping):
-            raise ValueError(f"Malformed stored filter JSON: {f!r}")
-        md = {}
-        if m:
-            try:
-                md = json.loads(m)
-            except (TypeError, ValueError):
-                md = {}
-        return _eval_filter(fd, md)
-
-    return pd.Series(
-        [match(m, f) for m, f in zip(metadata, filt)], dtype=bool
-    )
-
-
-def _matches_filter_udf(metadata: Column, filt: Column) -> Column:
-    from pyspark.sql import SparkSession
-    from pyspark.sql.types import BooleanType
-
-    from ..shipping import ensure_shipped
-
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        # The kernel references module-level functions (pickled by
-        # reference); ship the package so workers can import it.
-        ensure_shipped(spark)
-    udf = F.pandas_udf(_matches_filter_series, BooleanType())
-    return udf(metadata, filt)
-
-
 def _eval_filter(node: Mapping[str, Any], md: Mapping[str, Any]) -> bool:
     """Interpreter twin of functions/filters.py:compile_filter (same
     Pinecone semantics, evaluated against a parsed metadata dict)."""
@@ -307,7 +249,7 @@ def _eval_filter(node: Mapping[str, Any], md: Mapping[str, Any]) -> bool:
         else:
             # implicit-$eq shorthand routes through the SAME typed
             # equality as explicit $eq: Python's True == 1 must not
-            # make interpret mode match rows compile mode rejects
+            # make this reference match rows the compiled path rejects
             if not _json_eq(md.get(key), value):
                 return False
     return True
@@ -406,13 +348,12 @@ def topk_search_arrow(
     qid = F.element_at(F.lit(list(query_ids)), F.col("_qidx") + 1).alias(
         "query_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return (
-        scored.select(qid, F.col(doc_id_col), F.col("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return cap_per_group(
+        scored.select(qid, F.col(doc_id_col), F.col("score")),
+        "query_id",
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )
 
 
@@ -517,12 +458,12 @@ def ann_lsh_topk(
         .groupBy(query_id_col, doc_id_col)
         .agg(F.first("score").alias("score"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return (
-        pair_scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return cap_per_group(
+        pair_scores,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )
 
 
@@ -570,12 +511,13 @@ def hamming_topk(
         F.col(doc_id_col),
         hamming_distance(F.col("_dc"), F.col("_qc")).alias("hamming"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("hamming"), F.col(doc_id_col)
-    )
     bound = int(rerank) * k if rerank else k
-    short = cand.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= F.lit(bound)
+    short = cap_per_group(
+        cand,
+        query_id_col,
+        bound,
+        [F.col("hamming"), F.col(doc_id_col)],
+        rank_col="rank",
     )
     if not rerank:
         return short
@@ -598,11 +540,12 @@ def hamming_topk(
             ),
         )
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(doc_id_col)
-    )
-    return exact.withColumn("rank", F.row_number().over(w2)).where(
-        F.col("rank") <= F.lit(int(k))
+    return cap_per_group(
+        exact,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(doc_id_col)],
+        rank_col="rank",
     )
 
 
@@ -817,11 +760,10 @@ def lsh_index_topk(
             ),
         )
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("score"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= F.lit(int(k)))
-        .select(query_id_col, id_col, "score", "rank")
-    )
+    return cap_per_group(
+        scored,
+        query_id_col,
+        k,
+        [F.desc("score"), F.col(id_col)],
+        rank_col="rank",
+    ).select(query_id_col, id_col, "score", "rank")

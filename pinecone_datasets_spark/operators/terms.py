@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
 
 from ..parallel import widen
+from .sampling import cap_per_group
 
 
 def _words(text_col: str) -> F.Column:
@@ -240,18 +241,16 @@ def characteristic_terms(
     the raw double — near-equal scores then tie (broken by term) the same
     way in any engine, instead of flipping on 1-ulp ``ln`` differences.
     """
-    from pyspark.sql import Window
-
     rank_score = (
         F.round("tf_idf", round_scores)
         if round_scores is not None
         else F.col("tf_idf")
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc(rank_score), F.col("term")
-    )
     scored = tf_idf(df, text_col=text_col, id_col=id_col, min_df=min_df)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return cap_per_group(
+        scored,
+        id_col,
+        k,
+        [F.desc(rank_score), F.col("term")],
+        rank_col="rank",
     )

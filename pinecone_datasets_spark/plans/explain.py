@@ -1,7 +1,7 @@
 """Physical-plan introspection helpers.
 
 Used by tests and by the bench harness to *verify* the plans we claim:
-filters pushed to the parquet scan, pruned read schemas, broadcast joins.
+filters pushed to the parquet scan, pruned read schemas.
 Scale discipline is only real if it's asserted.
 """
 
@@ -40,7 +40,3 @@ def scan_read_schema(df: DataFrame) -> list[str]:
                 cols.append(name)
     return cols
 
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    plan = formatted_plan(df)  # one explain round-trip, not two
-    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan

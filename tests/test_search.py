@@ -115,9 +115,33 @@ def test_topk_with_stored_filters(spark):
     assert sorted(r["id"] for r in out) == ["a", "c"]
 
 
-def test_stored_filters_interpret_mode_matches_compiled(spark):
-    """The Arrow-UDF interpreter (fallback mode) and the compiled CASE
-    chain must agree on mixed null/typed filters."""
+def _reference_stored_filter_topk(docs, queries, k):
+    """Python replay of ``topk_search(metric="dot",
+    apply_stored_filters=True)``: each stored filter is evaluated by
+    ``search._eval_filter``, the reference twin of ``compile_filter``,
+    and ranks follow (score desc, id asc)."""
+    import json
+
+    from pinecone_datasets_spark.operators.search import _eval_filter
+
+    out = set()
+    for q in queries.collect():
+        f = q["filter"]
+        fd = json.loads(f) if f else None
+        hits = []
+        for d in docs.collect():
+            md = json.loads(d["metadata"]) if d["metadata"] else {}
+            if fd is None or _eval_filter(fd, md):
+                score = float(np.dot(d["values"], q["vector"]))
+                hits.append((-score, d["id"]))
+        for rank, (_, did) in enumerate(sorted(hits)[:k], 1):
+            out.add((q["query_id"], did, rank))
+    return out
+
+
+def test_stored_filters_compiled_matches_reference_evaluator(spark):
+    """The compiled CASE chain must select and rank exactly what the
+    Python reference evaluator selects, on mixed null/typed filters."""
     import json
 
     docs = spark.createDataFrame(
@@ -139,17 +163,11 @@ def test_stored_filters_interpret_mode_matches_compiled(spark):
     compiled = topk_search(
         docs, qdf, metric="dot", apply_stored_filters=True
     ).collect()
-    interpreted = topk_search(
-        docs,
-        qdf,
-        metric="dot",
-        apply_stored_filters=True,
-        stored_filter_mode="interpret",
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    assert sorted(
-        [(r["query_id"], r["id"], r["rank"]) for r in compiled]
-    ) == sorted([(r["query_id"], r["id"], r["rank"]) for r in interpreted])
+    got = {(r["query_id"], r["id"], r["rank"]) for r in compiled}
+    assert got == _reference_stored_filter_topk(docs, qdf, 5)
+    assert {(q, d) for q, d, _ in got} == {
+        (0, "a"), (0, "b"), (1, "a"), (1, "b"), (1, "c"), (1, "d")
+    }
 
 
 def test_stored_filter_malformed_json_raises(spark):
@@ -391,10 +409,10 @@ def test_null_top_k_defaults_to_five(spark):
     assert counts == {"q0": 5, "q1": 2}
 
 
-def test_interpret_mode_typed_equality_matches_compile(spark):
+def test_stored_filter_typed_equality_matches_reference(spark):
     """The implicit-$eq shorthand must use the typed JSON equality in
-    BOTH modes: {'x': 1} must NOT match metadata {'x': true} in
-    interpret mode (Python's True == 1) when compile mode rejects it
+    the compiled path and in the Python reference evaluator alike:
+    {'x': 1} must NOT match metadata {'x': true} (Python's True == 1)
     (r10 review, runtime-confirmed divergence)."""
     docs = spark.createDataFrame(
         [
@@ -407,24 +425,19 @@ def test_interpret_mode_typed_equality_matches_compile(spark):
         [("q0", [1.0, 0.0], '{"x": 1}')],
         "query_id string, vector array<double>, filter string",
     )
-    for mode in ("compile", "interpret"):
-        ids = {
-            r["id"]
-            for r in topk_search(
-                docs,
-                qs,
-                metric="cosine",
-                k=5,
-                apply_stored_filters=True,
-                stored_filter_mode=mode,
-            ).collect()
-        }
-        assert ids == {"int"}, mode
+    ids = {
+        r["id"]
+        for r in topk_search(
+            docs, qs, metric="dot", k=5, apply_stored_filters=True
+        ).collect()
+    }
+    assert ids == {"int"}
+    assert {d for _, d, _ in _reference_stored_filter_topk(docs, qs, 5)} == ids
 
 
 def test_interpret_mode_rejects_malformed_like_compile(spark):
     """Unknown operators and $-prefixed top-level keys must raise in
-    interpret mode for EVERY row — not only rows carrying the field —
+    the reference evaluator for EVERY row — not only rows carrying the field —
     and regardless of field presence (r10 review)."""
     from pinecone_datasets_spark.operators.search import (
         _eval_filter,

@@ -279,6 +279,7 @@ MUTATIONS: list[Mut] = [
 ]
 
 SEARCH = "pinecone_datasets_spark/operators/search.py"
+SAMPLING = "pinecone_datasets_spark/operators/sampling.py"
 WINDOWS = "pinecone_datasets_spark/operators/windows.py"
 
 MUTATIONS += [
@@ -338,8 +339,8 @@ MUTATIONS += [
         key="q19_q20_topk_metrics",
         name="search_tiebreak_flipped",
         path=SEARCH,
-        old="F.desc(\"score\"), F.col(doc_id_col)\n    )\n    return (\n        scored.withColumn(\"rank\", F.row_number().over(w))",
-        new="F.desc(\"score\"), F.desc(doc_id_col)\n    )\n    return (\n        scored.withColumn(\"rank\", F.row_number().over(w))",
+        old='            [F.desc("score"), F.col(doc_id_col)],\n            rank_col="rank",',
+        new='            [F.desc("score"), F.desc(doc_id_col)],\n            rank_col="rank",',
     ),
     Mut(
         key="q19_q20_topk_metrics",
@@ -1334,16 +1335,15 @@ MUTATIONS += [
         key="q19_q20_topk_metrics",
         name="lib_rank_off_by_one",
         path=SEARCH,
-        old='& (F.col("rank") <= F.col("top_k"))',
-        new='& (F.col("rank") < F.col("top_k"))',
+        old='.where(F.col("rank") <= F.col("top_k"))',
+        new='.where(F.col("rank") < F.col("top_k"))',
     ),
     Mut(
         key="q19_q20_topk_metrics",
         name="lib_tiebreak_desc",
-        path=SEARCH,
-        old='w = Window.partitionBy(query_id_col).orderBy(\n        F.desc("score"), F.col(doc_id_col)\n    )',
-        new='w = Window.partitionBy(query_id_col).orderBy(\n        F.desc("score"), F.desc(doc_id_col)\n    )',
-        count=2,  # exact topk + rescore share the tie rule
+        path=SAMPLING,
+        old="w = Window.partitionBy(*groups).orderBy(*order_by)",
+        new="w = Window.partitionBy(*groups).orderBy(\n        *order_by[:-1], order_by[-1].desc()\n    )",
     ),
     Mut(
         key="q19_q20_topk_metrics",
