@@ -19,7 +19,12 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pinecone_datasets_spark.functions.filters import compile_filter
-from pinecone_datasets_spark.functions.text import token_count, word_count
+from pinecone_datasets_spark.functions.text import (
+    normalize_ws_sql,
+    token_count,
+    word_count,
+    words_sql,
+)
 from pinecone_datasets_spark.functions.vector import (
     cosine_similarity,
     dot_product,
@@ -6430,7 +6435,7 @@ def _oracle_simhash() -> str:
     return f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(list_distinct(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'))) AS tok
+         unnest(list_distinct({words_sql('lower(text)')})) AS tok
   FROM documents
 ), h AS (
   SELECT doc_id,
@@ -6452,22 +6457,19 @@ def _oracle_bm25_ctes(queries_cte: str, k: int) -> str:
 q AS ({queries_cte}),
 toks AS (
   SELECT doc_id,
-         unnest(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+')) AS term
+         unnest({words_sql('lower(text)')}) AS term
   FROM documents
 ), tf AS (
   SELECT doc_id, term, count(*) AS tf
-  FROM toks WHERE term <> '' GROUP BY doc_id, term
+  FROM toks GROUP BY doc_id, term
 ), dl AS (
   SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id
 ), stats AS (
   SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM dl
 ), qt AS (
-  SELECT DISTINCT query_id, term FROM (
-    SELECT query_id,
-           unnest(string_split_regex(lower(trim(query_text)), '[ \\t\\n\\r\\f\\x0B]+'))
-             AS term
-    FROM q)
-  WHERE term <> ''
+  SELECT DISTINCT query_id,
+         unnest({words_sql('lower(query_text)')}) AS term
+  FROM q
 ), dft AS (
   SELECT term, count(*) AS df FROM tf
   WHERE term IN (SELECT term FROM qt) GROUP BY term
@@ -6781,7 +6783,7 @@ def _oracle_minhash(num_hashes: int = 8, bands: int = 4, k: int = 5) -> str:
     )
     return f"""
 WITH norm AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g') AS t
+  SELECT doc_id, {normalize_ws_sql('lower(text)')} AS t
   FROM documents
 ), sh AS (
   SELECT doc_id, list_distinct(list_transform(
@@ -6860,7 +6862,7 @@ def _oracle_jaccard(
     # keeps both engines' pair joins bounded at sf0.1+ (r13).
     return f"""
 WITH norm AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g') AS t
+  SELECT doc_id, {normalize_ws_sql('lower(text)')} AS t
   FROM documents
 ), sh AS (
   SELECT doc_id, unnest(list_distinct(list_transform(
@@ -6895,30 +6897,28 @@ _DUP_CORPUS = """
   FROM documents WHERE doc_id % 10 = 0
 """
 
-_FP = "md5(regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'))"
+_FP = f"md5({normalize_ws_sql('lower(text)')})"
 
 # Annotation CTE shared by the curation oracles: word count + quality score
 # over an upstream relation named ``dedup`` (duckdb twin of
 # functions/text.py word_count + quality_score).
-_ANNOTATE = """
+_ANNOTATE = f"""
 annotated AS (
   SELECT doc_id, lang,
-         (CASE WHEN trim(regexp_replace(text, '[ \t\n\r\f\x0B]+', ' ', 'g')) = '' THEN 0
-               ELSE len(list_filter(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'), x -> len(x) > 0))
-          END)::BIGINT AS n_words,
+         len({words_sql('text')})::BIGINT AS n_words,
          (CASE WHEN len(text) < 20 THEN len(text) / 20.0
                ELSE least(1.0, 2000.0 / greatest(len(text), 1)) END
           + CASE WHEN (len(text) - len(regexp_replace(text,
-                   '[.,;:!?''"()\\[\\]{}-]', '', 'g'))) / greatest(len(text), 1) > 0.2
+                   '[.,;:!?''"()\\[\\]{{}}-]', '', 'g'))) / greatest(len(text), 1) > 0.2
                  THEN 0.0
                  ELSE 1 - ((len(text) - len(regexp_replace(text,
-                   '[.,;:!?''"()\\[\\]{}-]', '', 'g'))) / greatest(len(text), 1)) * 5
+                   '[.,;:!?''"()\\[\\]{{}}-]', '', 'g'))) / greatest(len(text), 1)) * 5
             END
           + least(1.0,
-              (len(list_filter(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
+              (len(list_filter({words_sql('lower(text)')},
                  x -> x IN ('the','a','an','and','or','of','to','in','is','it',
                             'that','for','on','with','as','was','at','by','be')))
-               / greatest(len(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+')), 1)) * 4.0)
+               / greatest(len({words_sql('lower(text)')}), 1)) * 4.0)
          ) / 3.0 AS quality
   FROM dedup
 )
@@ -6953,7 +6953,7 @@ def _oracle_minhash_oph(num_hashes: int = 8, bands: int = 4, k: int = 5) -> str:
     )
     return f"""
 WITH norm AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g') AS t
+  SELECT doc_id, {normalize_ws_sql('lower(text)')} AS t
   FROM documents
 ), h AS (
   SELECT doc_id,
@@ -7148,27 +7148,19 @@ ORDER BY doc_id
 """,
         "q13_text_stats": f"""
 SELECT doc_id,
-       CASE WHEN trim(regexp_replace(text, '[ \t\n\r\f\x0B]+', ' ', 'g')) = '' THEN 0
-            ELSE len(list_filter(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'), x -> len(x) > 0))
-       END::BIGINT AS n_words,
-       CASE WHEN trim(regexp_replace(replace(text, ' ', chr(10) || chr(10)), '[ \t\n\r\f\x0B]+', ' ', 'g')) = '' THEN 0
-            ELSE len(list_filter(string_split_regex(trim(replace(text, ' ', chr(10) || chr(10))), '[ \t\n\r\f\x0B]+'), x -> len(x) > 0))
-       END::BIGINT AS n_words_wrapped,
+       len({words_sql('text')})::BIGINT AS n_words,
+       len({words_sql("replace(text, ' ', chr(10) || chr(10))")})::BIGINT AS n_words_wrapped,
        greatest(
          ceil(len(text) / 4.0)::BIGINT,
-         (CASE WHEN trim(regexp_replace(text, '[ \t\n\r\f\x0B]+', ' ', 'g')) = '' THEN 0
-               ELSE len(list_filter(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'), x -> len(x) > 0))
-          END)::BIGINT) AS n_tokens,
+         len({words_sql('text')})::BIGINT) AS n_tokens,
        n_chars,
        round(({_q13_entropy_sql}), 6) AS entropy
 FROM documents
 """,
-        "q14_corpus_stats": """
+        "q14_corpus_stats": f"""
 SELECT lang, count(*) AS n_docs,
        round(avg(n_chars) + 1e-9, 2) AS avg_chars,
-       round(avg(CASE WHEN trim(regexp_replace(text, '[ \t\n\r\f\x0B]+', ' ', 'g')) = '' THEN 0
-                 ELSE len(list_filter(string_split_regex(trim(text), '[ \t\n\r\f\x0B]+'), x -> len(x) > 0))
-                 END), 2) AS avg_words
+       round(avg(len({words_sql('text')})), 2) AS avg_words
 FROM documents GROUP BY lang ORDER BY lang
 """,
         "q15_dedup_exact_groups": f"""
@@ -7311,25 +7303,24 @@ ORDER BY part, query_id, rank
         "q25_simhash": _oracle_simhash(),
         "q42_dedup_clusters": _oracle_clusters(num_hashes=8, bands=4, k=5),
         "q52_cluster_reps": _oracle_cluster_reps(),
-        "q43_top_terms": """
+        "q43_top_terms": f"""
 SELECT term, count(*)::BIGINT AS n
 FROM (
-  SELECT unnest(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+')) AS term
+  SELECT unnest({words_sql('lower(text)')}) AS term
   FROM documents
 )
-WHERE len(term) > 0
 GROUP BY term
 ORDER BY n DESC, term
 LIMIT 20
 """,
-        "q44_characteristic_terms": """
+        "q44_characteristic_terms": f"""
 WITH ex AS (
   SELECT doc_id,
-         unnest(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+')) AS term
+         unnest({words_sql('lower(text)')}) AS term
   FROM documents
 ), tc AS (
   SELECT doc_id, term, count(*)::BIGINT AS tf
-  FROM ex WHERE len(term) > 0 GROUP BY doc_id, term
+  FROM ex GROUP BY doc_id, term
 ), df_t AS (
   SELECT term, count(*)::BIGINT AS df FROM tc GROUP BY term
 ), scored AS (
@@ -7349,7 +7340,7 @@ ORDER BY doc_id, rank
 """,
         # Bloom replay: same md5 positions (seed:value, 52 bits, mod
         # 2^14), same 63-bit words as operators/sketch.py:bloom_build.
-        "q53_incremental_dedup": """
+        "q53_incremental_dedup": f"""
 WITH aug AS (
   -- planted dup structure, mirroring the Spark entry (r11): corpus
   -- clones at +1e6 (seen-before) and +2e6 (within-batch dup)
@@ -7362,7 +7353,7 @@ WITH aug AS (
   FROM documents WHERE doc_id % 5 != 0 AND doc_id % 20 = 1
 ), fp AS (
   SELECT doc_id, lang, source, n_chars,
-         md5(regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g')) AS f,
+         md5({normalize_ws_sql('lower(text)')}) AS f,
          (doc_id >= 1000000 OR doc_id % 5 = 0) AS is_batch
   FROM aug
 ), batch AS (
@@ -7397,7 +7388,7 @@ bpos AS (
   GROUP BY 1
 )
 , mh_norm AS (
-  SELECT doc_id, regexp_replace(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g') AS t
+  SELECT doc_id, {normalize_ws_sql('lower(text)')} AS t
   FROM aug
 ), mh_sh AS (
   SELECT doc_id, list_distinct(list_transform(
@@ -7448,11 +7439,11 @@ ORDER BY part, doc_id, index_id
                 for i in range(8)
             ),
         ),
-        "q51_quantile_filter": """
+        "q51_quantile_filter": f"""
 WITH t AS (
   SELECT doc_id, len(text) AS n,
-         string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+') AS ws,
-         len(text) - len(regexp_replace(text, '[.,;:!?''"()\\[\\]{}-]', '', 'g')) AS n_punct
+         {words_sql('lower(text)')} AS ws,
+         len(text) - len(regexp_replace(text, '[.,;:!?''"()\\[\\]{{}}-]', '', 'g')) AS n_punct
   FROM documents
 ), parts AS (
   SELECT doc_id,
@@ -7500,11 +7491,10 @@ SELECT 'bucket', doc_id, round(quality, 4), bucket FROM bkt
 ORDER BY part, doc_id
 """,
         "q50_quantized_topk": _oracle_quantized_topk(),
-        "q49_pack_chunks": """
+        "q49_pack_chunks": f"""
 WITH RECURSIVE t AS (
   SELECT doc_id,
-         len(list_filter(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
-                         x -> len(x) > 0))::BIGINT AS n_tokens
+         len({words_sql('lower(text)')})::BIGINT AS n_tokens
   FROM documents
 ), c AS (
   SELECT doc_id, n_tokens,
@@ -7524,8 +7514,7 @@ WITH RECURSIVE t AS (
 ), warr AS (
   -- ORIGINAL-case words: chunk_text preserves document casing (r10)
   SELECT doc_id,
-         list_filter(string_split_regex(trim(text), '[ \\t\\n\\r\\f\\x0B]+'),
-                     x -> len(x) > 0) AS w
+         {words_sql('text')} AS w
   FROM documents
 ), rag0 AS (
   -- chunker: windows of 64 tokens, stride 48 (overlap 16); unnested
@@ -7700,7 +7689,7 @@ bpe_triples AS (
 -- enumerate-dict overwrite in byte_bpe_vocab).
 bpre AS (
   SELECT doc_id, regexp_extract_all(text,
-    ' ?[A-Za-z]+| ?[0-9]+| ?[!-/:-@\[-`{-~]+') AS ws
+    ' ?[A-Za-z]+| ?[0-9]+| ?[!-/:-@\\[-`{{-~]+') AS ws
   FROM documents
 ),
 bhist AS (
@@ -7862,11 +7851,10 @@ SELECT 'byte_bpe', doc_id, n_tokens, idhash,
 FROM byte_triples
 ORDER BY part, doc_id, c1
 """,
-        "q48_decontaminate": """
+        "q48_decontaminate": f"""
 WITH w AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
-                     x -> len(x) > 0) AS words
+         {words_sql('lower(text)')} AS words
   FROM documents
 ), g AS (
   SELECT doc_id,
@@ -8008,13 +7996,10 @@ FROM events
 GROUP BY day
 ORDER BY day
 """,
-        "q58_unigram_lm": """
+        "q58_unigram_lm": f"""
 WITH toks AS (
-  SELECT doc_id, term FROM (
-    SELECT doc_id,
-           unnest(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+')) AS term
-    FROM documents
-  ) WHERE len(term) > 0
+  SELECT doc_id, unnest({words_sql('lower(text)')}) AS term
+  FROM documents
 ), vocab AS (
   SELECT term, count(*)::BIGINT AS n FROM toks GROUP BY term
 ), tot AS (
@@ -8026,8 +8011,7 @@ WITH toks AS (
   GROUP BY doc_id
 ), tarr AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
-                     t -> len(t) > 0) AS t
+         {words_sql('lower(text)')} AS t
   FROM documents
 ), bstream AS (
   SELECT doc_id, unnest(list_transform(range(2, len(t) + 1),
@@ -8386,10 +8370,10 @@ ORDER BY o_custkey, o_orderkey
 SELECT event_type, count(DISTINCT user_id) AS n_users
 FROM events GROUP BY event_type ORDER BY event_type
 """,
-        "q29_lang_detect": """
+        "q29_lang_detect": f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+') AS ws
+         {words_sql('lower(text)')} AS ws
   FROM documents
 ), scores AS (
   SELECT doc_id, lang,
@@ -8407,11 +8391,11 @@ SELECT doc_id,
        lang
 FROM scores ORDER BY doc_id
 """,
-        "q30_quality_score": """
+        "q30_quality_score": f"""
 WITH t AS (
   SELECT doc_id, text, len(text) AS n,
-         string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+') AS ws,
-         len(text) - len(regexp_replace(text, '[.,;:!?''"()\\[\\]{}-]', '', 'g')) AS n_punct
+         {words_sql('lower(text)')} AS ws,
+         len(text) - len(regexp_replace(text, '[.,;:!?''"()\\[\\]{{}}-]', '', 'g')) AS n_punct
   FROM documents
 ), parts AS (
   SELECT doc_id,
@@ -8474,19 +8458,19 @@ SELECT c_mktsegment,
 FROM per_cust JOIN customer ON o_custkey = c_custkey
 GROUP BY c_mktsegment ORDER BY c_mktsegment
 """,
-        "q39_rolling_hash": """
+        "q39_rolling_hash": f"""
 SELECT doc_id,
        list_reduce(
          list_prepend(0::BIGINT,
-           list_transform(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
+           list_transform({words_sql('lower(text)')},
                           t -> ('0x' || substr(md5(t), 1, 8))::BIGINT)),
          (a, b) -> (a * 1000003 + b) % 2147483647) AS fp
 FROM documents ORDER BY doc_id
 """,
-        "q40_repetition_signals": """
+        "q40_repetition_signals": f"""
 WITH w AS (
   SELECT doc_id,
-         string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+') AS words
+         {words_sql('lower(text)')} AS words
   FROM documents
 ), base AS (
   SELECT doc_id, words, len(words) AS n,
@@ -8531,11 +8515,10 @@ FROM red ORDER BY doc_id
 """,
         # Boilerplate: corpus-frequent bigrams (document frequency over
         # per-doc DISTINCT grams), then per-doc position-level hit counts.
-        "q75_boilerplate": r"""
+        "q75_boilerplate": rf"""
 WITH w AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '[ \t\n\r\f\x0B]+'),
-                     x -> len(x) > 0) AS words
+         {words_sql('lower(text)')} AS words
   FROM documents
 ), g AS (
   SELECT doc_id,
@@ -9214,7 +9197,7 @@ ORDER BY part, query_id, rank
             + ") v(query_id, query_text)",
             k=5,
         )
-        + """,
+        + f""",
 bm10 AS (
   SELECT query_id, doc_id, score,
          row_number() OVER (PARTITION BY query_id
@@ -9250,10 +9233,9 @@ orig AS (
          round(cnt / sum(cnt) OVER (PARTITION BY query_id), 12) AS pwq
   FROM (SELECT query_id, term, count(*) AS cnt
         FROM (SELECT query_id,
-                     unnest(string_split_regex(lower(trim(query_text)),
-                                               '[ \\t\\n\\r\\f\\x0B]+')) AS term
+                     unnest({words_sql('lower(query_text)')}) AS term
               FROM q)
-        WHERE term <> '' GROUP BY query_id, term)
+        GROUP BY query_id, term)
 ),
 model AS (
   SELECT coalesce(o.query_id, e.query_id) AS query_id,
@@ -9443,8 +9425,7 @@ corpus AS (
 ),
 wrd AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
-                     x -> len(x) > 0) AS words
+         {words_sql('lower(text)')} AS words
   FROM corpus
 ),
 ph AS (
@@ -9748,8 +9729,7 @@ s75 AS ({b['q75_boilerplate']}),
 -- repeated set, gaps-and-islands run lengths
 warr77 AS (
   SELECT doc_id,
-         list_filter(string_split_regex(lower(trim(text)), '[ \\t\\n\\r\\f\\x0B]+'),
-                     x -> len(x) > 0) AS w
+         {words_sql('lower(text)')} AS w
   FROM documents
 ),
 gram77 AS (
@@ -10720,10 +10700,8 @@ rep AS (
   SELECT source AS domain, count(*) AS n_docs,
          sum(length(text)) AS total_chars,
          count(DISTINCT lang) AS n_langs,
-         count(DISTINCT md5(regexp_replace(lower(trim(text)),
-                                           '[ \t\n\r\f\x0B]+', ' ', 'g'))) AS n_unique,
-         count(md5(regexp_replace(lower(trim(text)),
-                                  '[ \t\n\r\f\x0B]+', ' ', 'g'))) AS n_fp
+         count(DISTINCT md5({normalize_ws_sql('lower(text)')})) AS n_unique,
+         count(md5({normalize_ws_sql('lower(text)')})) AS n_fp
   FROM (SELECT * FROM documents
         UNION ALL
         SELECT doc_id + 1000000, text, lang, source, n_chars
@@ -10731,7 +10709,7 @@ rep AS (
 ),
 fpo AS (
   SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS f
+         md5({normalize_ws_sql('lower(text)')}) AS f
   FROM documents
 ),
 v2 AS (
@@ -10743,7 +10721,7 @@ v2 AS (
 ),
 fpn AS (
   SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '[ \t\n\r\f\x0B]+', ' ', 'g')) AS f
+         md5({normalize_ws_sql('lower(text)')}) AS f
   FROM v2
 ),
 dif AS (

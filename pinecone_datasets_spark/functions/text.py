@@ -3,10 +3,20 @@
 All built-in column expressions — no Python UDFs in the hot path — so they
 stay inside whole-stage codegen and are exactly reproducible by a SQL
 oracle. Target table: ``documents(doc_id, text, lang, source, n_chars)``.
+
+What a word is, and what whitespace is, is decided once, here:
+``words``/``words_sql``/``split_words`` (Spark, DuckDB, Python) split on
+``WHITESPACE_RUN_PATTERN`` and drop empty tokens, and
+``normalize_ws``/``normalize_ws_sql`` collapse runs of that class to one
+space and strip the edges by the same class. The class is ASCII on
+purpose: NBSP (U+00A0) and the other Unicode spaces are content, not
+whitespace, in all three engines. (Spark's ``trim`` strips only U+0020
+and DuckDB's also strips NBSP, so neither engine's ``trim`` is used.)
 """
 
 from __future__ import annotations
 
+import re
 from typing import Union
 
 from pyspark.sql import Column
@@ -19,21 +29,60 @@ def _c(col: ColumnOrName) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+# explicit ASCII whitespace, NOT \s: Java's \s matches vertical tab
+# (\x0B) while RE2's does not, so \s-based twins diverge whenever the
+# control-strip stage is toggled off. (\v is also unusable: Java reads
+# it as the vertical-whitespace CLASS, RE2 as the single char.)
+WHITESPACE_RUN_PATTERN = r"[ \t\n\r\f\x0B]+"
+_WHITESPACE_RUN_RE = re.compile(WHITESPACE_RUN_PATTERN)
+
+
+def words(text: ColumnOrName) -> Column:
+    """Whitespace tokens: split on ``WHITESPACE_RUN_PATTERN``, empty
+    tokens dropped (edge whitespace and empty text yield none). NULL
+    stays NULL. Callers lowercase first when they want to
+    (``words(F.lower(c))``)."""
+    return F.array_remove(F.split(_c(text), WHITESPACE_RUN_PATTERN), "")
+
+
+def words_sql(text_expr: str) -> str:
+    """DuckDB twin of ``words``."""
+    return (
+        f"list_filter(string_split_regex({text_expr},"
+        f" '{WHITESPACE_RUN_PATTERN}'), w -> w <> '')"
+    )
+
+
+def split_words(s: str) -> list[str]:
+    """Python twin of ``words`` for UDF kernels."""
+    return [w for w in _WHITESPACE_RUN_RE.split(s) if w]
+
+
+def normalize_ws(text: ColumnOrName) -> Column:
+    """Collapse whitespace runs to one space, then strip the edges by
+    the same class. A regex strip, not the engine's ``trim``: see the
+    module docstring."""
+    return F.regexp_replace(
+        F.regexp_replace(_c(text), WHITESPACE_RUN_PATTERN, " "), "^ | $", ""
+    )
+
+
+def normalize_ws_sql(text_expr: str) -> str:
+    """DuckDB twin of ``normalize_ws``."""
+    return (
+        f"regexp_replace(regexp_replace({text_expr},"
+        f" '{WHITESPACE_RUN_PATTERN}', ' ', 'g'), '^ | $', '', 'g')"
+    )
+
+
 def word_count(text: ColumnOrName) -> Column:
-    """Whitespace-token count: non-empty runs split on the explicit
-    whitespace class (same character-class semantics in Java regex and
-    RE2 — replayable in DuckDB as string_split_regex + list_filter).
-    The original spaces-only formula counted a 500-line
-    newline-separated document as ONE word, silently failing the
-    min_words curation gate, and counted 'a  b' as three (r11 review;
+    """Whitespace-token count: the size of ``words`` (DuckDB twin:
+    ``len(words_sql(...))``). The original spaces-only formula counted
+    a 500-line newline-separated document as ONE word, silently failing
+    the min_words curation gate, and counted 'a  b' as three (r11 review;
     the split-filter-size form measured ~15% cheaper than
     normalize-then-count-spaces)."""
-    return F.size(
-        F.filter(
-            F.split(F.trim(_c(text)), WHITESPACE_RUN_PATTERN),
-            lambda w: F.length(w) > 0,
-        )
-    )
+    return F.size(words(text))
 
 
 def token_count(text: ColumnOrName) -> Column:
@@ -62,7 +111,7 @@ _STOPWORDS = (
 def stopword_ratio(text: ColumnOrName) -> Column:
     """Fraction of whitespace tokens that are English stopwords.
     Built-ins only: split → filter → size."""
-    toks = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    toks = words(F.lower(_c(text)))
     stop = F.size(
         F.filter(toks, lambda w: w.isin(list(_STOPWORDS)))
     )
@@ -92,22 +141,22 @@ def detect_language(text: ColumnOrName) -> Column:
     A real system would plug fastText here; the Spark plumbing (pure
     column expressions, no shuffle) is the deliverable.
     """
-    toks = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    toks = words(F.lower(_c(text)))
     markers = {
         "de": ("der", "die", "das", "und", "ist", "nicht", "ein", "zu"),
         "en": ("the", "and", "is", "of", "to", "in", "that", "it"),
         "es": ("el", "la", "los", "las", "es", "y", "que", "un"),
         "fr": ("le", "la", "les", "et", "est", "que", "une", "des"),
     }
-    def _hits(words: tuple[str, ...]):
+    def _hits(vocab: tuple[str, ...]):
         # Single-arg lambda required: F.filter treats a second parameter
         # (even a defaulted one) as the element-index argument.
-        wordlist = list(words)
+        wordlist = list(vocab)
         return lambda w: w.isin(wordlist)
 
     scores = [
-        (lang, F.size(F.filter(toks, _hits(words))))
-        for lang, words in sorted(markers.items())
+        (lang, F.size(F.filter(toks, _hits(vocab))))
+        for lang, vocab in sorted(markers.items())
     ]
     best = scores[0][1]
     for _, s in scores[1:]:
@@ -122,8 +171,7 @@ def detect_language(text: ColumnOrName) -> Column:
 def doc_fingerprint(text: ColumnOrName) -> Column:
     """Content fingerprint: lowercase, collapse whitespace, md5.
     Identical in any SQL engine; used as the exact-dedup key."""
-    normalized = F.regexp_replace(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, " ")
-    return F.md5(normalized)
+    return F.md5(normalize_ws(F.lower(_c(text))))
 
 
 # Rolling-hash parameters: base ~2^20, Mersenne-31 modulus. Accumulator
@@ -139,7 +187,7 @@ def rolling_hash_fingerprint(text: ColumnOrName) -> Column:
     cross-engine reproducible: hash32 is the first 8 md5 hex digits, and
     any SQL engine can replay the fold (DuckDB: list_reduce).
     """
-    toks = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
+    toks = words(F.lower(_c(text)))
     tok_hash = lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast(  # noqa: E731
         "long"
     )
@@ -160,10 +208,10 @@ def rolling_hash_fingerprint(text: ColumnOrName) -> Column:
 def duplicate_word_fraction(text: ColumnOrName) -> Column:
     """Fraction of word occurrences that repeat an earlier word:
     1 - distinct_words / words. 0.0 for empty text."""
-    words = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
-    n = F.size(words)
+    toks = words(F.lower(_c(text)))
+    n = F.size(toks)
     return F.when(n <= 0, F.lit(0.0)).otherwise(
-        (n - F.size(F.array_distinct(words))) / n.cast("double")
+        (n - F.size(F.array_distinct(toks))) / n.cast("double")
     )
 
 
@@ -177,12 +225,12 @@ def top_bigram_fraction(text: ColumnOrName) -> Column:
     at 100 TB that's the whole corpus through the wire for a per-row
     scalar. Guarded for n < 2 words (sequence() would run backwards).
     """
-    words = F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN)
-    n = F.size(words)
+    toks = words(F.lower(_c(text)))
+    n = F.size(toks)
     bigrams = F.transform(
         F.sequence(F.lit(1), n - 1),
         lambda i: F.concat_ws(
-            " ", F.element_at(words, i), F.element_at(words, i + 1)
+            " ", F.element_at(toks, i), F.element_at(toks, i + 1)
         ),
     )
     longest_run = F.aggregate(
@@ -340,12 +388,6 @@ def compression_ratio(text: ColumnOrName, level: int = 6) -> Column:
 # regex dialects accept this class verbatim.
 CONTROL_CHAR_PATTERN = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F-\x9F]"
 
-# explicit ASCII whitespace, NOT \s: Java's \s matches vertical tab
-# (\x0B) while RE2's does not, so \s-based twins diverge whenever the
-# control-strip stage is toggled off. (\v is also unusable: Java reads
-# it as the vertical-whitespace CLASS, RE2 as the single char.)
-WHITESPACE_RUN_PATTERN = r"[ \t\n\r\f\x0B]+"
-
 
 def unicode_normalize(text: ColumnOrName, form: str = "NFC") -> Column:
     """Unicode normalization, Arrow-batched ``unicodedata.normalize``;
@@ -403,13 +445,7 @@ def clean_text(
     if strip_controls:
         t = F.regexp_replace(t, CONTROL_CHAR_PATTERN, "")
     if collapse_whitespace:
-        # regex trim, NOT engine trim(): DuckDB's trim strips unicode
-        # spaces (NBSP) while Spark's strips only 0x20 — the regex
-        # keeps both engines at the same ASCII-whitespace contract
-        # (NBSP is content here, not whitespace).
-        t = F.regexp_replace(
-            F.regexp_replace(t, WHITESPACE_RUN_PATTERN, " "), "^ | $", ""
-        )
+        t = normalize_ws(t)
     return t
 
 
@@ -427,10 +463,7 @@ def clean_text_sql(
     if strip_controls:
         t = f"regexp_replace({t}, '{CONTROL_CHAR_PATTERN}', '', 'g')"
     if collapse_whitespace:
-        t = (
-            f"regexp_replace(regexp_replace({t}, "
-            f"'{WHITESPACE_RUN_PATTERN}', ' ', 'g'), '^ | $', '', 'g')"
-        )
+        t = normalize_ws_sql(t)
     return t
 
 
@@ -516,17 +549,10 @@ def mean_words_per_line(text: ColumnOrName) -> Column:
     short-line gate). 0.0 for no lines."""
     lines = _lines(text)
     n = F.size(lines)
-    words = F.aggregate(
-        lines,
-        F.lit(0).cast("long"),
-        lambda a, l: a
-        + F.size(
-            F.filter(
-                F.split(l, WHITESPACE_RUN_PATTERN), lambda w: w != ""
-            )
-        ),
+    n_words = F.aggregate(
+        lines, F.lit(0).cast("long"), lambda a, l: a + F.size(words(l))
     )
-    return F.when(n <= 0, F.lit(0.0)).otherwise(words / n.cast("double"))
+    return F.when(n <= 0, F.lit(0.0)).otherwise(n_words / n.cast("double"))
 
 
 #: The line-gate keys ``apply_line_gates`` understands (FineWeb/Gopher
@@ -601,15 +627,9 @@ def line_stats_sql(text_expr: str) -> dict:
         f"len(list_filter({lines},"
         f" l -> regexp_matches(l, '{endp_pat}')))"
     )
-    # DuckDB standard strings pass backslashes through raw, so the
-    # pattern needs NO backslash doubling — only quote escaping. (An
-    # earlier `.replace("\\", "\\")` here was a no-op that read as if
-    # it doubled them; doubling would actually break the RE2 class.)
-    ws = WHITESPACE_RUN_PATTERN.replace("'", "''")
-    words = (
+    n_words = (
         f"coalesce(list_sum(list_transform({lines},"
-        f" l -> len(list_filter(string_split_regex(l, '{ws}'),"
-        f" w -> w <> '')))), 0)"
+        f" l -> len({words_sql('l')}))), 0)"
     )
     frac = "CASE WHEN {n} <= 0 THEN 0.0 ELSE {num} / CAST({n} AS DOUBLE) END"
     # the coalesce(…, 0) inside tot would turn NULL text into 0.0 here
@@ -626,7 +646,7 @@ def line_stats_sql(text_expr: str) -> dict:
         "dup_line_char_frac": char_frac,
         "bullet_line_frac": frac.format(n=n, num=bullet),
         "end_punct_line_frac": frac.format(n=n, num=endp),
-        "mean_words_per_line": frac.format(n=n, num=words),
+        "mean_words_per_line": frac.format(n=n, num=n_words),
     }
 
 
@@ -694,10 +714,7 @@ def badword_fraction(
     if not blocklist:
         raise ValueError("blocklist must be non-empty")
     terms = [str(w).lower() for w in blocklist]
-    toks = F.filter(
-        F.split(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN),
-        lambda w: w != "",
-    )
+    toks = words(F.lower(_c(text)))
     n = F.size(toks)
     hits = F.size(F.filter(toks, lambda w: w.isin(terms)))
     return F.when(n <= 0, F.lit(0.0)).otherwise(hits / n.cast("double"))

@@ -39,17 +39,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..parallel import widen
-from .decontaminate import _ngrams_of, _words
+from ..functions.text import words
+from .decontaminate import _ngrams_of
 
 
-def _position_grams(words: Column, n: int) -> Column:
+def _position_grams(toks: Column, n: int) -> Column:
     """Space-joined n-gram at every position (non-distinct): position i
-    covers words[i..i+n-1]. Short documents yield an empty array."""
+    covers toks[i..i+n-1]. Short documents yield an empty array."""
     grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
     )
-    return F.when(F.size(words) >= n, grams).otherwise(
+    return F.when(F.size(toks) >= n, grams).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -77,11 +78,11 @@ def frequent_ngrams(
     # every scale. On low-split inputs these passes stay scan-bound.
     # materialize the word array BEFORE the n-gram lambda references it:
     # Catalyst does not CSE into higher-order-function lambdas, so an
-    # inlined _words() re-tokenizes the text per gram position —
+    # inlined words() re-tokenizes the text per gram position —
     # O(tokens²) per doc (see decontaminate._ngrams_of, measured 22.8s
     # vs 2s at sf0.1)
     grams = documents.select(
-        F.col(id_col), _words(text_col).alias("__w")
+        F.col(id_col), words(F.lower(F.col(text_col))).alias("__w")
     ).select(
         F.col(id_col),
         F.explode(_ngrams_of(F.col("__w"), n)).alias("ngram"),
@@ -196,7 +197,9 @@ def duplicated_spans(
     from pyspark.sql import Window
 
     documents = widen(documents, id_col)  # see frequent_ngrams
-    pos = _position_frame(documents, id_col, _words(text_col), k)
+    pos = _position_frame(
+        documents, id_col, words(F.lower(F.col(text_col))), k
+    )
     repeated = (
         pos.select(id_col, "ngram")
         .distinct()
@@ -224,7 +227,7 @@ def duplicated_spans(
     base = documents.select(
         F.col(id_col),
         F.greatest(
-            F.lit(0), F.size(_words(text_col)) - (k - 1)
+            F.lit(0), F.size(words(F.lower(F.col(text_col)))) - (k - 1)
         ).cast("long").alias("n_positions"),
     )
     return base.join(runs, id_col, "left").select(
@@ -275,7 +278,9 @@ def remove_duplicated_spans(
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     documents = widen(documents, id_col)  # see frequent_ngrams
-    pos = _position_frame(documents, id_col, _words(text_col), k)
+    pos = _position_frame(
+        documents, id_col, words(F.lower(F.col(text_col))), k
+    )
     repeated = (
         pos.select(id_col, "ngram")
         .distinct()
@@ -290,7 +295,7 @@ def remove_duplicated_spans(
         .agg(F.sort_array(F.collect_set("pos")).alias("__hits"))
     )
     return _strip_by_hits(
-        documents, hit_arrays, id_col, _words(text_col), k,
+        documents, hit_arrays, id_col, words(F.lower(F.col(text_col))), k,
         out_col, "n_removed_words",
     )
 
@@ -317,12 +322,12 @@ def boilerplate_profile(
     # and needs no separate distinct-gram array build. The decisive
     # cost fix, though, is materializing the word array as an attribute
     # column before the gram lambda references it (see frequent_ngrams
-    # above): the previous inlined-_words shape re-tokenized per
+    # above): the previous inlined-words shape re-tokenized per
     # position — O(tokens²), the r4 suite's tallest pole at ~9s warm /
     # sf0.1; this shape runs 0.5s warm.
     per_doc = (
         documents.select(
-            F.col(id_col), _words(text_col).alias("__w")
+            F.col(id_col), words(F.lower(F.col(text_col))).alias("__w")
         )
         .select(
             F.col(id_col),
@@ -355,7 +360,7 @@ def boilerplate_profile(
     base = documents.select(
         F.col(id_col),
         F.greatest(
-            F.lit(0), F.size(_words(text_col)) - (n - 1)
+            F.lit(0), F.size(words(F.lower(F.col(text_col)))) - (n - 1)
         ).cast("long").alias("n_positions"),
     )
     return (

@@ -30,24 +30,17 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
+from ..functions.text import words
 from ..functions.vector import unit_rows
 
 
-def _words(text_col: str) -> Column:
-    return F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), WS_RUN),
-        lambda w: F.length(w) > 0,
-    )
-
-
-def _ngrams_of(words: Column, n: int) -> Column:
+def _ngrams_of(toks: Column, n: int) -> Column:
     """Distinct space-joined n-grams of an already-computed word array.
     Documents shorter than n words yield an empty array (Spark's
     ``sequence(1, 0)`` counts *down*, so the short side must be guarded
     explicitly — DuckDB's ``generate_series(1, 0)`` is empty).
 
-    ``words`` should be an *attribute column* in any corpus-scale plan:
+    ``toks`` should be an *attribute column* in any corpus-scale plan:
     the lambda references it once per element, and Catalyst does not CSE
     into higher-order-function lambdas — an inlined split-words
     expression re-tokenizes the text per n-gram (O(tokens²) per doc,
@@ -55,11 +48,11 @@ def _ngrams_of(words: Column, n: int) -> Column:
     if n < 1:
         raise ValueError(f"n must be >= 1: {n}")
     grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
     )
     return F.array_distinct(
-        F.when(F.size(words) >= n, grams).otherwise(
+        F.when(F.size(toks) >= n, grams).otherwise(
             F.array().cast("array<string>")
         )
     )
@@ -70,7 +63,7 @@ def word_ngrams(text_col: str, n: int) -> Column:
     expression contexts and small inputs. Corpus-scale callers go
     through ``ngram_contamination``, which materializes the word array
     first (see ``_ngrams_of``)."""
-    return _ngrams_of(_words(text_col), n)
+    return _ngrams_of(words(F.lower(F.col(text_col))), n)
 
 
 def _grams_table(
@@ -78,8 +71,10 @@ def _grams_table(
 ):
     """(keep..., _grams) with the word array materialized as an
     attribute column between tokenization and gram-building."""
-    words = df.select(*keep, _words(text_col).alias("_w"))
-    return words.select(
+    tok_df = df.select(
+        *keep, words(F.lower(F.col(text_col))).alias("_w")
+    )
+    return tok_df.select(
         *keep, _ngrams_of(F.col("_w"), n).alias("_grams")
     )
 

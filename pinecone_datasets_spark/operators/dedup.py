@@ -24,8 +24,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
-from ..functions.text import doc_fingerprint
+from ..functions.text import doc_fingerprint, normalize_ws, words
 from ..functions.vector import cosine_from_norms, l2_norm
 from ..parallel import widen
 
@@ -110,8 +109,8 @@ def exact_dup_groups(
 
 
 def normalized_text(text: Column) -> Column:
-    """Dedup normalization: lowercase, trim, collapse whitespace."""
-    return F.regexp_replace(F.lower(F.trim(text)), WS_RUN, " ")
+    """Dedup normalization: lowercase, collapse and strip whitespace."""
+    return normalize_ws(F.lower(text))
 
 
 def char_shingles(text: Column, k: int = 5) -> Column:
@@ -591,9 +590,7 @@ def simhash64(
     ~0.1 s at sf0.01.
     """
     df = widen(df, id_col)
-    toks = F.array_distinct(
-        F.split(F.lower(F.trim(F.col(text_col))), WS_RUN)
-    )
+    toks = F.array_distinct(words(F.lower(F.col(text_col))))
     if hash_fn == "md5":
         return df.select(
             F.col(id_col), _simhash_md5_udf()(toks).alias("simhash")

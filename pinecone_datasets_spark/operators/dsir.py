@@ -37,26 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Tokens are ``words`` of the lowercased text in all three twins (batch,
+# DuckDB replay, streaming dsir_score kernel).
+from ..functions.text import words, words_sql
+from ..parallel import widen
+
 _TWO_52 = float(1 << 52)
-
-
-#: Explicit whitespace-run class shared by BOTH twins: Java ``\s``
-#: matches vertical tab (\x0B) but RE2's (DuckDB) does not, so a bare
-#: ``\s+`` tokenizes \x0B-bearing documents differently across engines
-#: — changing bucket counts, weights, and potentially the Gumbel
-#: keep-set. Same convention as functions/text.py
-#: WHITESPACE_RUN_PATTERN and the streaming dsir_score kernel.
-from ..functions.text import WHITESPACE_RUN_PATTERN as _WS_RUN  # noqa: E402
-from ..parallel import widen  # noqa: E402
-
-
-def _tokens(text_col: str) -> "F.Column":
-    """The repo-canonical tokenizer shape (keyword.py): lower, trim,
-    whitespace split — with the explicit engine-portable class."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), _WS_RUN),
-        lambda t: t != "",
-    )
 
 
 def _check_n(n: int) -> None:
@@ -104,7 +90,7 @@ def doc_bucket_counts(
     """
     grams = df.select(
         F.col(id_col),
-        F.explode(_ngrams(_tokens(text_col), n)).alias("__g"),
+        F.explode(_ngrams(words(F.lower(F.col(text_col))), n)).alias("__g"),
     )
     return (
         grams.select(
@@ -118,7 +104,9 @@ def doc_bucket_counts(
 def _corpus_bucket_counts(
     df: DataFrame, text_col: str, n: int, n_buckets: int, out: str
 ) -> DataFrame:
-    grams = df.select(F.explode(_ngrams(_tokens(text_col), n)).alias("__g"))
+    grams = df.select(
+        F.explode(_ngrams(words(F.lower(F.col(text_col))), n)).alias("__g")
+    )
     return (
         grams.select(_bucket(F.col("__g"), n_buckets).alias("bucket"))
         .groupBy("bucket")
@@ -237,9 +225,10 @@ def dsir_weights(
     # in instead — no corpus shuffle anywhere in the weight plan.
     # coalesce: size() is NULL for NULL text, which must land in the
     # weight-0 branch too (the SQL twin's LEFT JOIN already does)
-    empty = raw_docs.where(
-        F.coalesce(F.size(_ngrams(_tokens(text_col), n)), F.lit(0)) == 0
-    ).select(F.col(id_col), F.lit(0.0).alias("log_weight"))
+    grams = _ngrams(words(F.lower(F.col(text_col))), n)
+    empty = raw_docs.where(F.coalesce(F.size(grams), F.lit(0)) == 0).select(
+        F.col(id_col), F.lit(0.0).alias("log_weight")
+    )
     return scored.select(id_col, "log_weight").unionByName(empty)
 
 
@@ -329,10 +318,7 @@ def dsir_sql(
         gram_list = (
             f"list_transform(range(1, len(toks) - {n - 2}), i -> {parts})"
         )
-    tok_expr = (
-        f"list_filter(string_split_regex(lower(trim({text_col})),"
-        f" '{_WS_RUN}'), t -> t != '')"
-    )
+    tok_expr = words_sql(f"lower({text_col})")
     bucket = (
         "CAST(concat('0x', substr(md5(g), 1, 13)) AS BIGINT) % "
         f"{n_buckets}"

@@ -37,12 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
+from ..functions.text import words
 from .sampling import cap_per_group
-
-
-def _tokens(text_col: str) -> "F.Column":
-    return F.split(F.lower(F.trim(F.col(text_col))), WS_RUN)
 
 
 _MAX_ISIN_LITERALS = 1000
@@ -73,8 +69,9 @@ def _tf_frames(docs: DataFrame, id_col: str, text_col: str):
     # under-split input (one small parquet file) would run it serially.
     docs = widen(docs, id_col)
     toks = docs.select(
-        F.col(id_col), F.explode(_tokens(text_col)).alias("term")
-    ).where(F.col("term") != "")
+        F.col(id_col),
+        F.explode(words(F.lower(F.col(text_col)))).alias("term"),
+    )
     tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
@@ -149,9 +146,8 @@ def bm25_topk(
     qterms = (
         queries.select(
             F.col(query_id_col),
-            F.explode(_tokens(query_text_col)).alias("term"),
+            F.explode(words(F.lower(F.col(query_text_col)))).alias("term"),
         )
-        .where(F.col("term") != "")
         .distinct()
     )
     scored = _bm25_scores(
@@ -333,9 +329,8 @@ def bm25_index_topk(
     qterms = (
         queries.select(
             F.col(query_id_col),
-            F.explode(_tokens(query_text_col)).alias("term"),
+            F.explode(words(F.lower(F.col(query_text_col)))).alias("term"),
         )
-        .where(F.col("term") != "")
         .distinct()
     )
     term_list = [r["term"] for r in qterms.select("term").distinct().collect()]

@@ -44,25 +44,17 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
+from ..functions.text import word_count, words
 
 
 def whitespace_token_count(text_col: str) -> Column:
-    """Token count = number of non-empty whitespace-separated words of
-    the lower/trimmed text. Matches the q49 oracle's DuckDB formulation
-    token for token. NULL text counts as 0 tokens — without the
-    coalesce, one NULL doc poisoned the packing window sums and emitted
-    rows with NULL global_start/chunk_id the loader cannot place, and
-    silently mis-bucketed in length_bucketed_batches (r11 review)."""
-    return F.coalesce(
-        F.size(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), WS_RUN),
-                lambda w: F.length(w) > 0,
-            )
-        ).cast("long"),
-        F.lit(0).cast("long"),
-    )
+    """Token count = ``word_count`` of the text; the q49 oracle counts
+    ``words_sql`` of the same text. NULL text counts as 0 tokens —
+    without the coalesce, one NULL doc poisoned the packing window sums
+    and emitted rows with NULL global_start/chunk_id the loader cannot
+    place, and silently mis-bucketed in length_bucketed_batches (r11
+    review)."""
+    return F.coalesce(word_count(text_col).cast("long"), F.lit(0).cast("long"))
 
 
 def pack_documents(
@@ -280,10 +272,7 @@ def chunk_text(
     # — the old F.lower here silently lowercased every served chunk
     # (r10 review). Whitespace runs still collapse to single spaces
     # (the join separator), which IS disclosed below.
-    words = F.filter(
-        F.split(F.trim(F.col(text_col)), WS_RUN),
-        lambda w: F.length(w) > 0,
-    )
+    doc_words = words(F.col(text_col))
     # chunk starts: 0, stride, 2*stride, ... while start < n_tokens
     starts = (
         f"transform(sequence(0, greatest(CAST(ceil((size(__w) - 1) /"
@@ -303,7 +292,7 @@ def chunk_text(
         " ELSE CAST(array() AS ARRAY<ARRAY<STRING>>) END"
     )
     return (
-        df.select(F.col(id_col), words.alias("__w"))
+        df.select(F.col(id_col), doc_words.alias("__w"))
         .select(
             F.col(id_col),
             F.posexplode_outer(F.expr(chunks)).alias(

@@ -36,11 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import words
 from .keyword import (
     _bm25_scores,
     _filtered_postings,
     _tf_frames,
-    _tokens,
 )
 from .sampling import cap_per_group
 
@@ -112,9 +112,9 @@ def _rm3_model_from_frames(
     qid = query_id_col
     qterms = (
         queries.select(
-            F.col(qid), F.explode(_tokens(query_text_col)).alias("term")
+            F.col(qid),
+            F.explode(words(F.lower(F.col(query_text_col)))).alias("term"),
         )
-        .where(F.col("term") != "")
         .distinct()
     )
     scored = _bm25_scores(tf, dl, stats, qterms, k1, b, qid, id_col)
@@ -183,9 +183,9 @@ def _interpolate_model(
     )
     orig = (
         queries.select(
-            F.col(qid), F.explode(_tokens(query_text_col)).alias("term")
+            F.col(qid),
+            F.explode(words(F.lower(F.col(query_text_col)))).alias("term"),
         )
-        .where(F.col("term") != "")
         .groupBy(qid, "term")
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .select(

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.text import split_words, words_sql
 from ..functions.vector import unit_rows
 from .sampling import cap_per_group
 
@@ -156,19 +157,14 @@ def _default_pair_scorer(queries: "pd.Series", docs: "pd.Series"):
     shape — is exactly what a real model scorer drops into.
     """
     import hashlib
-    import re
 
-    # Explicit ASCII whitespace class, NOT str.split(): Python splits on
-    # Unicode whitespace (NBSP, U+2028, ...) while the SQL twin's RE2
-    # '\s' does not — the explicit class means the same thing to
-    # Python re, Java regex, and RE2, keeping the parity contract.
-    ws = re.compile(r"[ \t\n\r\f\v]+")
-
+    # split_words, NOT str.split(): Python splits on Unicode whitespace
+    # (NBSP, U+2028, ...) while the SQL twin does not.
     def one(q, d):
         if q is None or d is None:
             return 0.0
-        qs = {t for t in ws.split(str(q).lower()) if t}
-        ds = {t for t in ws.split(str(d).lower()) if t}
+        qs = set(split_words(str(q).lower()))
+        ds = set(split_words(str(d).lower()))
         ov = len(qs & ds) / max(len(qs), 1)
         h = hashlib.md5(f"{q}\x01{d}".encode("utf-8")).hexdigest()
         return ov + int(h[:13], 16) / float(1 << 52) * 1e-6
@@ -276,14 +272,9 @@ def crossencoder_rerank_sql(
         "CAST(concat('0x', substr(md5(q.__qt || chr(1) || d.__dt), 1, 13)) "
         f"AS BIGINT) / {float(1 << 52)!r} * 1e-6"
     )
-    wcls = "[ \\t\\n\\r\\f\\v]+"  # same class the Python scorer uses
-    ov = (
-        "len(list_intersect("
-        f"list_distinct(list_filter(string_split_regex(lower(q.__qt), '{wcls}'), t -> t != '')), "
-        f"list_distinct(list_filter(string_split_regex(lower(d.__dt), '{wcls}'), t -> t != ''))"
-        ")) / greatest(len(list_distinct(list_filter("
-        f"string_split_regex(lower(q.__qt), '{wcls}'), t -> t != ''))), 1)"
-    )
+    qs = f"list_distinct({words_sql('lower(q.__qt)')})"
+    ds = f"list_distinct({words_sql('lower(d.__dt)')})"
+    ov = f"len(list_intersect({qs}, {ds})) / greatest(len({qs}), 1)"
     return f"""
 WITH cand AS (SELECT {query_id_col}, {doc_id_col} FROM {candidates_clause}),
 q AS (SELECT {query_id_col}, {query_text_col} AS __qt FROM {queries_clause}),

@@ -70,7 +70,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .decontaminate import _words
+from ..functions.text import words
 
 
 def _position_window_hashes(
@@ -93,7 +93,9 @@ def _position_window_hashes(
     # The per-position explode multiplies rows ~|tokens|-fold: an
     # under-split input (one small parquet file) would run it serially.
     df = widen(df, id_col)
-    words = df.select(F.col(id_col), _words(text_col).alias("_w"))
+    tok_df = df.select(
+        F.col(id_col), words(F.lower(F.col(text_col))).alias("_w")
+    )
 
     def whash(i: Column) -> Column:
         gram = F.concat_ws(" ", F.slice(F.col("_w"), i, window))
@@ -101,7 +103,7 @@ def _position_window_hashes(
             return F.md5(gram)
         return F.xxhash64(gram).cast("string")
 
-    grams = words.select(
+    grams = tok_df.select(
         F.col(id_col),
         F.when(
             F.size("_w") >= window,
@@ -230,12 +232,12 @@ def strip_repeated_spans(
         ).alias("_spans")
     )
     passthrough = [c for c in df.columns if c != text_col]
-    words = df.select(
+    tok_df = df.select(
         *passthrough,
         F.col(text_col).alias("_orig"),
-        _words(text_col).alias("_w"),
+        words(F.lower(F.col(text_col))).alias("_w"),
     )
-    joined = words.join(per_doc, id_col, "left")
+    joined = tok_df.join(per_doc, id_col, "left")
     covered = lambda i: F.exists(  # noqa: E731 — 1-based position i
         F.col("_spans"), lambda sp: (sp["s"] <= i) & (i <= sp["e"])
     )

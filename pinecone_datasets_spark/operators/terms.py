@@ -20,14 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import WHITESPACE_RUN_PATTERN as WS_RUN
-
+from ..functions.text import words
 from ..parallel import widen
 from .sampling import cap_per_group
-
-
-def _words(text_col: str) -> F.Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), WS_RUN)
 
 
 def top_terms(
@@ -39,11 +34,13 @@ def top_terms(
     so the result is deterministic)."""
     return (
         # outer: InferFiltersFromGenerate would re-tokenize per row in a
-        # pushed-down filter (rule skips outer generates); the existing
-        # length>0 predicate already drops the null placeholder rows.
+        # pushed-down filter (rule skips outer generates); the null
+        # predicate drops the placeholder rows of token-less docs.
         widen(df, text_col)
-        .select(F.explode_outer(_words(text_col)).alias("term"))
-        .where(F.length("term") > 0)
+        .select(
+            F.explode_outer(words(F.lower(F.col(text_col)))).alias("term")
+        )
+        .where(F.col("term").isNotNull())
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.col("term"))
@@ -64,10 +61,11 @@ def tf_idf(
     that also caps the broadcast vocabulary size.
     """
     # outer explode: see top_terms on InferFiltersFromGenerate; the
-    # length predicate drops the null placeholder rows.
+    # null predicate drops the placeholder rows.
     exploded = widen(df, id_col).select(
-        F.col(id_col), F.explode_outer(_words(text_col)).alias("term")
-    ).where(F.length("term") > 0)
+        F.col(id_col),
+        F.explode_outer(words(F.lower(F.col(text_col)))).alias("term"),
+    ).where(F.col("term").isNotNull())
     term_counts = exploded.groupBy(id_col, "term").agg(
         F.count(F.lit(1)).alias("tf")
     )
@@ -122,8 +120,9 @@ def unigram_logprob(
     broadcast when it fits (AQE decides), shuffled hash join otherwise.
     """
     exploded = widen(df, id_col).select(
-        F.col(id_col), F.explode_outer(_words(text_col)).alias("term")
-    ).where(F.length("term") > 0)
+        F.col(id_col),
+        F.explode_outer(words(F.lower(F.col(text_col)))).alias("term"),
+    ).where(F.col("term").isNotNull())
     vocab = exploded.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
     total = vocab.agg(F.sum("n").alias("total"))
     logp = F.log10(F.col("n") / F.col("total"))
@@ -173,10 +172,7 @@ def bigram_logprob(
     # Column API, not an expr string: embedding the explicit whitespace
     # class into a Spark-SQL literal would re-enter escape-dialect
     # territory (\x0B is not a recognized SQL-literal escape)
-    toks_col = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), WS_RUN),
-        lambda t: F.length(t) > 0,
-    )
+    toks_col = words(F.lower(F.col(text_col)))
     bigram_arr = (
         "CASE WHEN size(__toks) >= 2 THEN"
         " transform(sequence(2, size(__toks)),"
@@ -197,8 +193,9 @@ def bigram_logprob(
         F.substring_index("bg", " ", 1).alias("w1"), "n_bi"
     ).groupBy("w1").agg(F.sum("n_bi").alias("n_ctx"))
     uni_stream = df.select(
-        F.col(id_col), F.explode_outer(_words(text_col)).alias("term")
-    ).where(F.length("term") > 0)
+        F.col(id_col),
+        F.explode_outer(words(F.lower(F.col(text_col)))).alias("term"),
+    ).where(F.col("term").isNotNull())
     uni_vocab = uni_stream.groupBy("term").agg(
         F.count(F.lit(1)).alias("n_uni")
     )

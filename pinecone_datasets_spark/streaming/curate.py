@@ -25,7 +25,6 @@ length gate → quality gate → (optional) DSIR gate → exact dedup.
 from __future__ import annotations
 
 import hashlib
-import re
 from typing import Iterator, Optional
 
 import numpy as np
@@ -33,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import quality_score, word_count
+from ..functions.text import quality_score, split_words, word_count
 from ..operators.dsir import _check_n
 from .dedup import stream_exact_dedup
 
@@ -85,20 +84,13 @@ def dsir_score(
     """
     _check_n(n)
     arr = _ratio_array(ratios, n_buckets)
-    ws = re.compile(r"[ \t\n\r\f\v]+")
 
     @F.pandas_udf("double")
     def _weight(texts: pd.Series) -> pd.Series:
         def one(t):
             if t is None:
                 return 0.0
-            # .strip(" "), not .strip(): the batch twin's F.trim strips
-            # ASCII space only, while bare str.strip() also removes
-            # Unicode whitespace (NBSP, U+0085, ideographic space) the
-            # ASCII split class keeps attached to tokens — a doc with a
-            # leading NBSP would tokenize (and hash-bucket) differently
-            # across the two engines (r11 review)
-            toks = [w for w in ws.split(str(t).lower().strip(" ")) if w]
+            toks = split_words(str(t).lower())
             if len(toks) < n:
                 return 0.0
             counts: dict[int, int] = {}

@@ -7,9 +7,9 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from pinecone_datasets_spark.functions.text import words
 from pinecone_datasets_spark.operators.dsir import (
     _ngrams,
-    _tokens,
     doc_bucket_counts,
     dsir_log_ratios,
     dsir_resample,
@@ -26,7 +26,9 @@ def docs(spark):
 
 def _grams_of(spark, text, n):
     df = spark.createDataFrame([(text,)], "text string")
-    return df.select(_ngrams(_tokens("text"), n).alias("g")).first().g
+    return df.select(
+        _ngrams(words(F.lower(F.col("text"))), n).alias("g")
+    ).first().g
 
 
 def test_ngrams_shapes(spark):
@@ -43,7 +45,9 @@ def test_doc_bucket_counts_conserves_grams(spark, docs):
     per_doc = doc_bucket_counts(docs, n=2, n_buckets=64)
     total = per_doc.agg(F.sum("cnt")).first()[0]
     expected = docs.select(
-        F.sum(F.greatest(F.size(_tokens("text")) - 1, F.lit(0)))
+        F.sum(
+            F.greatest(F.size(words(F.lower(F.col("text")))) - 1, F.lit(0))
+        )
     ).first()[0]
     assert total == expected
     assert per_doc.where((F.col("bucket") < 0) | (F.col("bucket") >= 64)).count() == 0

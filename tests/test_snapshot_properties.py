@@ -26,9 +26,13 @@ corpus = st.dictionaries(
 
 
 def _norm(t: str) -> str:
+    """Reference normalization: the library's ASCII whitespace class,
+    spelled out here (not Python's Unicode ``\\s``/``strip()``, which
+    would also fold NBSP and the other Zs spaces the library keeps as
+    content)."""
     import re
 
-    return re.sub(r"\s+", " ", t.strip().lower())
+    return re.sub(r"[ \t\n\r\f\x0b]+", " ", t.lower()).strip(" ")
 
 
 @settings(

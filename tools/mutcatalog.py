@@ -215,8 +215,8 @@ MUTATIONS: list[Mut] = [
         key="q13_text_profile",
         name="wordcount_spaces_only",
         path=TEXT,
-        old="F.split(F.trim(_c(text)), WHITESPACE_RUN_PATTERN),",
-        new='F.split(F.trim(_c(text)), " "),',
+        old="    return F.size(words(text))",
+        new='    return F.size(F.array_remove(F.split(_c(text), " "), ""))',
     ),
     Mut(
         key="q13_text_profile",
@@ -259,8 +259,8 @@ MUTATIONS: list[Mut] = [
         key="q15_q16_dedup_exact",
         name="fingerprint_prefix_only",
         path=TEXT,
-        old="    normalized = F.regexp_replace(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, \" \")\n    return F.md5(normalized)",
-        new="    normalized = F.regexp_replace(F.lower(F.trim(_c(text))), WHITESPACE_RUN_PATTERN, \" \")\n    return F.md5(F.substring(normalized, 1, 100))",
+        old="    return F.md5(normalize_ws(F.lower(_c(text))))",
+        new="    return F.md5(F.substring(normalize_ws(F.lower(_c(text))), 1, 100))",
     ),
     Mut(
         key="q15_q16_dedup_exact",
