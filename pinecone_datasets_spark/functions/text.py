@@ -58,12 +58,19 @@ def split_words(s: str) -> list[str]:
     return [w for w in _WHITESPACE_RUN_RE.split(s) if w]
 
 
+# \z, not $: Java's $ also matches before a final U+0085, U+2028 or
+# U+2029 (its line terminators); RE2 and the Python twin do not
+_EDGE_SPACE_PATTERN = r"^ | \z"
+
+
 def normalize_ws(text: ColumnOrName) -> Column:
     """Collapse whitespace runs to one space, then strip the edges by
     the same class. A regex strip, not the engine's ``trim``: see the
     module docstring."""
     return F.regexp_replace(
-        F.regexp_replace(_c(text), WHITESPACE_RUN_PATTERN, " "), "^ | $", ""
+        F.regexp_replace(_c(text), WHITESPACE_RUN_PATTERN, " "),
+        _EDGE_SPACE_PATTERN,
+        "",
     )
 
 
@@ -71,7 +78,8 @@ def normalize_ws_sql(text_expr: str) -> str:
     """DuckDB twin of ``normalize_ws``."""
     return (
         f"regexp_replace(regexp_replace({text_expr},"
-        f" '{WHITESPACE_RUN_PATTERN}', ' ', 'g'), '^ | $', '', 'g')"
+        f" '{WHITESPACE_RUN_PATTERN}', ' ', 'g'), '{_EDGE_SPACE_PATTERN}',"
+        " '', 'g')"
     )
 
 

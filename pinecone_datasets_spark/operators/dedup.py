@@ -24,6 +24,8 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import index_store
+from ..fs import join
 from ..functions.text import doc_fingerprint, normalize_ws, words
 from ..functions.vector import cosine_from_norms, l2_norm
 from ..parallel import widen
@@ -796,9 +798,6 @@ def embedding_neardup_pairs(
 # Persisted MinHash index: incremental NEAR-dup for streaming/batch ingest
 # ---------------------------------------------------------------------------
 
-MINHASH_META_FILE = "minhash_index.json"
-
-
 def _band_bucket_md5(b: int, rows_per_band: int) -> Column:
     """md5 bucket of band ``b``'s signature slice — the ONE band-
     bucketing expression shared by the in-plan candidates
@@ -873,10 +872,6 @@ def build_minhash_index(
     three-scalar rows. Appending a deduplicated batch = append its
     rows to both tables (parquet append, no rewrite).
     """
-    import json as _json
-
-    from ..fs import FS, join as _join
-
     if num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes})"
@@ -886,46 +881,27 @@ def build_minhash_index(
     )
     sigs.persist()
     try:
-        # The two table writes only share the persisted signature frame
-        # — neither reads the other's output — so they are submitted as
-        # concurrent jobs (guide §2.6): the map-only signatures write
-        # back-fills executor slots freed by the bands write's
-        # range-shuffle tail instead of waiting for it. The cache
-        # guarantees each signature partition is computed once (the
-        # second job's tasks block on the block lock, then read).
-        from ..parallel import concurrent_actions
-
-        def _write_bands():
-            (
-                _band_keys(sigs, num_hashes, bands, id_col)
-                .repartitionByRange("bb")
-                .sortWithinPartitions("bb")
-                .write.mode("overwrite")
-                .parquet(_join(path, "bands"))
-            )
-
-        def _write_sigs():
-            sigs.write.mode("overwrite").parquet(_join(path, "signatures"))
-
-        concurrent_actions(
-            docs.sparkSession,
-            [_write_bands, _write_sigs],
-            "minhash index build: bands + signatures",
-        )
-    finally:
-        sigs.unpersist()
-    FS(docs.sparkSession).write_text(
-        _join(path, MINHASH_META_FILE),
-        _json.dumps(
+        # the two concurrent table writes share the persisted signature
+        # frame: each partition is computed once (the second job's
+        # tasks block on the block lock, then read)
+        band_keys = _band_keys(sigs, num_hashes, bands, id_col)
+        index_store.save(
+            path,
+            "minhash",
             {
                 "num_hashes": num_hashes,
                 "bands": bands,
                 "shingle_k": shingle_k,
                 "hash_fn": hash_fn,
                 "id_col": id_col,
-            }
-        ),
-    )
+            },
+            [
+                ("bands", band_keys, ("range", "bb")),
+                ("signatures", sigs, None),
+            ],
+        )
+    finally:
+        sigs.unpersist()
 
 
 def minhash_index_neardup(
@@ -954,13 +930,9 @@ def minhash_index_neardup(
     then broadcast into the signature table scan, and verification is a
     ``zip_with`` slot-agreement fold over candidate pairs only.
     """
-    import json as _json
-
-    from ..fs import FS, join as _join
-
     if not 0.0 <= threshold <= 1.0:
         raise ValueError(f"threshold must be in [0, 1]: {threshold}")
-    meta = _json.loads(FS(spark).read_text(_join(path, MINHASH_META_FILE)))
+    meta = index_store.load(spark, path, "minhash")
     num_hashes, bands = int(meta["num_hashes"]), int(meta["bands"])
     id_col = meta["id_col"]
 
@@ -984,7 +956,7 @@ def minhash_index_neardup(
             _persisted.append(bsigs)
     bkeys = _band_keys(bsigs, num_hashes, bands, batch_id_col)
 
-    index_bands = spark.read.parquet(_join(path, "bands"))
+    index_bands = spark.read.parquet(join(path, "bands"))
     distinct_keys = [r.bb for r in bkeys.select("bb").distinct().limit(
         max_literal_keys + 1
     ).collect()]
@@ -1016,7 +988,7 @@ def minhash_index_neardup(
     # verification: slot agreement over candidate pairs only — BOTH
     # signature tables restricted by broadcast semi-joins on candidate
     # ids (candidates are query-proportional; the raw batch may not be)
-    isigs = spark.read.parquet(_join(path, "signatures")).select(
+    isigs = spark.read.parquet(join(path, "signatures")).select(
         F.col(id_col).alias("index_id"), F.col("signature").alias("_is")
     )
     isigs = isigs.join(

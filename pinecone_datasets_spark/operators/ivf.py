@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import index_store
 from ..functions.vector import (
     NORM_FLOOR,
     cosine_from_norms,
@@ -544,8 +545,6 @@ def srp_codebook(
 # Persisted index: cell-partitioned parquet layout + centroid sidecar
 # ---------------------------------------------------------------------------
 
-IVF_CENTROIDS_FILE = "_ivf_centroids.json"
-
 
 def build_ivf_index(
     documents: DataFrame,
@@ -570,10 +569,6 @@ def build_ivf_index(
     collect job on a bounded sample instead of ~2 MLlib jobs per
     iteration); ``"mllib"`` keeps the distributed KMeans.
     """
-    import json as _json
-
-    from ..fs import FS, join as _join
-
     if trainer == "local":
         centroids = train_centroids_local(
             documents,
@@ -595,13 +590,12 @@ def build_ivf_index(
         documents, centroids, vector_col=vector_col,
         metric=metric, cell_col=cell_col,
     )
-    assigned.write.partitionBy(cell_col).mode("overwrite").parquet(path)
-    FS(documents.sparkSession).write_text(
-        _join(path, IVF_CENTROIDS_FILE),
-        _json.dumps(
-            {"metric": metric, "cell_col": cell_col,
-             "centroids": centroids.tolist()}
-        ),
+    index_store.save(
+        path,
+        "ivf",
+        {"metric": metric, "cell_col": cell_col,
+         "centroids": centroids.tolist()},
+        [(None, assigned, ("partition", cell_col))],
     )
     return centroids
 
@@ -610,13 +604,7 @@ def load_ivf_index(spark, path: str):
     """(documents_with_cells, centroids, metric, cell_col) from a layout
     written by ``build_ivf_index``. The scan is lazy — filters on the
     cell column prune partitions before any file is opened."""
-    import json as _json
-
-    from ..fs import FS, join as _join
-
-    meta = _json.loads(
-        FS(spark).read_text(_join(path, IVF_CENTROIDS_FILE))
-    )
+    meta = index_store.load(spark, path, "ivf")
     df = spark.read.parquet(path)
     return (
         df,

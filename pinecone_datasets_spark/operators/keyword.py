@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import index_store
 from ..functions.text import words
 from .sampling import cap_per_group
 
@@ -166,9 +167,6 @@ def bm25_topk(
 # Persisted index: postings parquet + scalar-stats sidecar
 # ---------------------------------------------------------------------------
 
-BM25_STATS_FILE = "_bm25_stats.json"
-
-
 def build_bm25_index(
     docs: DataFrame,
     path: str,
@@ -187,10 +185,6 @@ def build_bm25_index(
     "build offline, search online" split every production lexical stack
     uses (r2 benched the tokenize-everything-per-query path at 8.95 s
     for 50 output rows)."""
-    import json as _json
-
-    from ..fs import FS, join as _join
-
     # reuse _tf_frames: same tokenize/tf/dl pipeline AND its widen()
     # guard — the corpus tokenize explode is the build's dominant cost
     # and an under-split input (one dense parquet file) would run it
@@ -201,22 +195,16 @@ def build_bm25_index(
     postings = tf.join(dl, id_col).join(df_t, "term").select(
         "term", id_col, "tf", "dl", "df"
     )
-    (
-        postings.repartitionByRange("term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
     row = stats.collect()[0]
-    FS(docs.sparkSession).write_text(
-        _join(path, BM25_STATS_FILE),
-        _json.dumps(
-            {
-                "n_docs": int(row["n_docs"]),
-                "avgdl": float(row["avgdl"]),
-                "id_col": id_col,
-            }
-        ),
+    index_store.save(
+        path,
+        "bm25",
+        {
+            "n_docs": int(row["n_docs"]),
+            "avgdl": float(row["avgdl"]),
+            "id_col": id_col,
+        },
+        [(None, postings, ("range", "term"))],
     )
 
 
@@ -243,10 +231,6 @@ def merge_bm25_indexes(
     over the union corpus (equivalence-tested; avgdl is recombined in
     float, so raw scores can differ in the last ulp — below the 6-dp
     rank rounding)."""
-    import json as _json
-
-    from ..fs import FS, join as _join
-
     if len(paths) < 2:
         raise ValueError(f"need >= 2 indexes to merge: {paths}")
     if out_path in paths:
@@ -255,10 +239,7 @@ def merge_bm25_indexes(
         # path that is also being read from") and could leave a
         # half-rewritten index dir
         raise ValueError(f"out_path is also an input: {out_path}")
-    fs = FS(spark)
-    metas = [
-        _json.loads(fs.read_text(_join(p, BM25_STATS_FILE))) for p in paths
-    ]
+    metas = [index_store.load(spark, p, "bm25") for p in paths]
     id_cols = {m["id_col"] for m in metas}
     if len(id_cols) != 1:
         raise ValueError(f"indexes disagree on id_col: {sorted(id_cols)}")
@@ -286,19 +267,15 @@ def merge_bm25_indexes(
     # plain per-term row count over the union
     df_t = posts.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     merged = posts.join(df_t, "term").select("term", id_col, "tf", "dl", "df")
-    (
-        merged.repartitionByRange("term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(out_path)
-    )
     n_docs = sum(int(m["n_docs"]) for m in metas)
     avgdl = (
         sum(float(m["avgdl"]) * int(m["n_docs"]) for m in metas) / n_docs
     )
-    fs.write_text(
-        _join(out_path, BM25_STATS_FILE),
-        _json.dumps({"n_docs": n_docs, "avgdl": avgdl, "id_col": id_col}),
+    index_store.save(
+        out_path,
+        "bm25",
+        {"n_docs": n_docs, "avgdl": avgdl, "id_col": id_col},
+        [(None, merged, ("range", "term"))],
     )
 
 
@@ -318,11 +295,7 @@ def bm25_index_topk(
     construction), so it lands as a LITERAL ``term IN (...)`` predicate —
     visible in the scan's PushedFilters — before any join. Same result
     contract and tie-breaks as ``bm25_topk``."""
-    import json as _json
-
-    from ..fs import FS, join as _join
-
-    meta = _json.loads(FS(spark).read_text(_join(path, BM25_STATS_FILE)))
+    meta = index_store.load(spark, path, "bm25")
     id_col = meta["id_col"]
     n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
 

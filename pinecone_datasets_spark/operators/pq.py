@@ -37,7 +37,6 @@ scale engineering on the same data model.
 
 from __future__ import annotations
 
-import json as _json
 from typing import Optional
 
 import numpy as np
@@ -46,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
+from .. import index_store
 from ..functions.vector import NORM_FLOOR, unit_rows
 from .ivf import _nearest, _sq_dists, assign_cells, train_centroids_local
 from .sampling import cap_per_group
@@ -299,9 +299,6 @@ def pq_topk(
 # IVF-PQ: persisted cell-partitioned layout with PQ-coded (residual) vectors
 # ---------------------------------------------------------------------------
 
-IVFPQ_META_FILE = "_ivfpq_meta.json"
-
-
 def _residual_encode_udf(codebooks: np.ndarray, centroids: np.ndarray):
     """(vec, cell) -> PQ code of (vec - coarse_centroid[cell]).
 
@@ -452,38 +449,32 @@ def build_ivfpq_index(
         # stored vectors are in index (rotated) space; keep the
         # caller's column name
         out = out.withColumnRenamed(vector_col, orig_vector_col)
-    out.write.partitionBy(cell_col).mode("overwrite").parquet(path)
-
-    from ..fs import FS, join as _join
-
-    FS(documents.sparkSession).write_text(
-        _join(path, IVFPQ_META_FILE),
-        _json.dumps(
-            {
-                "metric": metric,
-                "residual": residual,
-                "cell_col": cell_col,
-                "code_col": code_col,
-                "doc_id_col": doc_id_col,
-                # pre-OPQ name: refine re-scores RAW vectors, so the
-                # search must select the column the index was built
-                # from, not assume "values" (r11 review)
-                "vector_col": orig_vector_col,
-                "centroids": cents.tolist(),
-                "codebooks": books.tolist(),
-                "opq_rotation": (
-                    rotation.tolist() if rotation is not None else None
-                ),
-            }
-        ),
+    index_store.save(
+        path,
+        "ivfpq",
+        {
+            "metric": metric,
+            "residual": residual,
+            "cell_col": cell_col,
+            "code_col": code_col,
+            "doc_id_col": doc_id_col,
+            # pre-OPQ name: refine re-scores RAW vectors, so the
+            # search must select the column the index was built
+            # from, not assume "values" (r11 review)
+            "vector_col": orig_vector_col,
+            "centroids": cents.tolist(),
+            "codebooks": books.tolist(),
+            "opq_rotation": (
+                rotation.tolist() if rotation is not None else None
+            ),
+        },
+        [(None, out, ("partition", cell_col))],
     )
 
 
 def load_ivfpq_index(spark, path: str):
     """(lazy coded scan, meta dict with NumPy codebooks/centroids)."""
-    from ..fs import FS, join as _join
-
-    meta = _json.loads(FS(spark).read_text(_join(path, IVFPQ_META_FILE)))
+    meta = index_store.load(spark, path, "ivfpq")
     meta["centroids"] = np.asarray(meta["centroids"], dtype=np.float64)
     meta["codebooks"] = np.asarray(meta["codebooks"], dtype=np.float64)
     if meta.get("opq_rotation") is not None:
@@ -569,30 +560,16 @@ def ivfpq_index_topk(
     doc_id_col = meta["doc_id_col"]
     m, n_codes, dsub = books.shape
 
-    qrows = queries.select(query_id_col, query_vector_col).collect()
+    qrows, qmat = index_store.collect_queries(
+        queries, query_id_col, query_vector_col
+    )
     if not qrows:
         # an upstream filter matching nothing must yield an empty
         # result frame, not a np.stack crash (r11 review)
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(
-                        query_id_col, queries.schema[query_id_col].dataType
-                    ),
-                    T.StructField(
-                        doc_id_col, coded.schema[doc_id_col].dataType
-                    ),
-                    T.StructField("score", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
+        return index_store.empty_topk(
+            spark, queries, query_id_col, doc_id_col,
+            coded.schema[doc_id_col].dataType,
         )
-    qmat = np.asarray(
-        [np.asarray(r[query_vector_col], dtype=np.float64) for r in qrows]
-    )
     if meta.get("opq_rotation") is not None:
         # index lives in OPQ-rotated space; rotate queries to match
         # (pure rotation: dot/cosine identical, refine stays raw-space)

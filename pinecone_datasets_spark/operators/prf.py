@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import index_store
 from ..functions.text import words
 from .keyword import (
     _bm25_scores,
@@ -365,12 +366,9 @@ def rm3_index_search(
     _validate_rm3(fb_k, n_terms, orig_weight)
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
-    import json as _json
+    from .keyword import bm25_index_topk
 
-    from ..fs import FS, join as _join
-    from .keyword import BM25_STATS_FILE, bm25_index_topk
-
-    meta = _json.loads(FS(spark).read_text(_join(path, BM25_STATS_FILE)))
+    meta = index_store.load(spark, path, "bm25")
     id_col = meta["id_col"]
     qid = query_id_col
     fb = bm25_index_topk(

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import index_store
+from ..fs import join
 from ..functions.filters import compile_filter
 from ..functions.vector import (
     cosine_from_norms,
@@ -549,9 +551,6 @@ def hamming_topk(
     )
 
 
-LSH_META_FILE = "_lsh_meta.json"
-
-
 def build_lsh_index(
     documents: DataFrame,
     path: str,
@@ -582,10 +581,6 @@ def build_lsh_index(
     Build cost: one signature pass (Arrow matmul kernel) + the sorted
     rewrite of bands·N rows of three scalars; the vector table is a
     map-only copy."""
-    import json as _json
-
-    from ..fs import FS, join as _join
-
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((bands * bits, dim))
     sig_udf = _band_signature_udf(planes, bands, bits)
@@ -599,49 +594,27 @@ def build_lsh_index(
         )
         .where(F.col("sig").isNotNull())
     )
-    # the signatures rewrite (range shuffle) and the vectors copy
-    # (map-only) read the same source but not each other — submitted as
-    # concurrent jobs so the copy back-fills the shuffle's idle tail
-    # (guide §2.6; same pattern as dedup.build_minhash_index).
-    # Overlap re-verified r14: sequential 3.1-4.4 s vs concurrent
-    # 1.9-2.5 s isolated at sf0.1, alternating same-window runs.
-    from ..parallel import concurrent_actions
-
-    def _write_sigs():
-        (
-            sigs.repartitionByRange("band", "sig")
-            .sortWithinPartitions("band", "sig")
-            .write.mode("overwrite")
-            .parquet(_join(path, "signatures"))
-        )
-
-    def _write_vectors():
-        (
-            documents.select(
-                F.col(id_col),
-                F.col(vector_col).alias("vector"),
-                l2_norm(vector_col).alias("norm"),
-            )
-            .write.mode("overwrite")
-            .parquet(_join(path, "vectors"))
-        )
-
-    concurrent_actions(
-        documents.sparkSession,
-        [_write_sigs, _write_vectors],
-        "lsh index build: signatures + vectors",
+    vectors = documents.select(
+        F.col(id_col),
+        F.col(vector_col).alias("vector"),
+        l2_norm(vector_col).alias("norm"),
     )
-    FS(documents.sparkSession).write_text(
-        _join(path, LSH_META_FILE),
-        _json.dumps(
-            {
-                "bands": bands,
-                "bits": bits,
-                "dim": dim,
-                "seed": seed,
-                "id_col": id_col,
-            }
-        ),
+    # the two writes run concurrently (sequential 3.1-4.4 s vs
+    # concurrent 1.9-2.5 s isolated at sf0.1, r14)
+    index_store.save(
+        path,
+        "lsh",
+        {
+            "bands": bands,
+            "bits": bits,
+            "dim": dim,
+            "seed": seed,
+            "id_col": id_col,
+        },
+        [
+            ("signatures", sigs, ("range", "band", "sig")),
+            ("vectors", vectors, None),
+        ],
     )
 
 
@@ -665,44 +638,29 @@ def lsh_index_topk(
     literal terms) and pushed as literal band/sig filters; candidates
     are query-proportional and broadcast onto the vector scan, so the
     corpus-sized tables never shuffle."""
-    import json as _json
-
     from pyspark.sql import types as T
 
-    from ..fs import FS, join as _join
-
-    meta = _json.loads(FS(spark).read_text(_join(path, LSH_META_FILE)))
+    meta = index_store.load(spark, path, "lsh")
     bands, bits = int(meta["bands"]), int(meta["bits"])
     dim, seed = int(meta["dim"]), int(meta["seed"])
     id_col = meta["id_col"]
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
 
-    qrows = queries.select(query_id_col, query_vector_col).collect()
+    qrows, qmat = index_store.collect_queries(
+        queries, query_id_col, query_vector_col
+    )
     qid_type = queries.schema[query_id_col].dataType
     if not qrows:
         id_type = (
-            spark.read.parquet(_join(path, "vectors"))
-            .schema[id_col]
-            .dataType
+            spark.read.parquet(join(path, "vectors")).schema[id_col].dataType
         )
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, qid_type),
-                    T.StructField(id_col, id_type),
-                    T.StructField("score", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
+        return index_store.empty_topk(
+            spark, queries, query_id_col, id_col, id_type
         )
 
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((bands * bits, dim))
-    qmat = np.asarray(
-        [np.asarray(r[query_vector_col], dtype=np.float64) for r in qrows]
-    )
     # identical kernel math to _band_signature_udf (same BLAS matmul,
     # same bit packing) so probe signatures match the stored ones
     signs = (qmat @ planes.T) > 0
@@ -730,7 +688,7 @@ def lsh_index_topk(
     # row-group skipping on the (band, sig)-sorted layout); the exact
     # (band, sig) pairing happens in the broadcast join
     sig_scan = (
-        spark.read.parquet(_join(path, "signatures"))
+        spark.read.parquet(join(path, "signatures"))
         .where(F.col("band").isin(band_list) & F.col("sig").isin(sig_list))
     )
     cands = (
@@ -749,7 +707,7 @@ def lsh_index_topk(
         ),
     ).withColumn("_qnorm", l2_norm("_qvec"))
     scored = (
-        spark.read.parquet(_join(path, "vectors"))
+        spark.read.parquet(join(path, "vectors"))
         .join(F.broadcast(cands), id_col)
         .join(F.broadcast(qv), query_id_col)
         .select(

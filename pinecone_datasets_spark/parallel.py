@@ -161,6 +161,12 @@ def concurrent_actions(spark, fns, description: str) -> None:
     from pyspark import inheritable_thread_target
 
     sc = spark.sparkContext
+    props = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+    caller = {p: sc.getLocalProperty(p) for p in props}
     group = f"concurrent-actions-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, description, interruptOnCancel=True)
     try:
@@ -187,11 +193,8 @@ def concurrent_actions(spark, fns, description: str) -> None:
             for f in futs:
                 f.result()
     finally:
-        # clear the group so later jobs on this thread aren't tagged
-        # with (or cancellable via) a finished build's group id
-        for prop in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        ):
-            sc.setLocalProperty(prop, None)
+        # restore the caller's group (None when it had none) so later
+        # jobs on this thread are neither tagged with nor cancellable via
+        # a finished build's group, nor stripped of their own
+        for prop, value in caller.items():
+            sc.setLocalProperty(prop, value)

@@ -106,8 +106,8 @@ def test_ivf_probes_fraction(spark, corpus):
 def test_build_load_index_roundtrip(spark, corpus, tmp_path):
     import os
 
+    from pinecone_datasets_spark.index_store import SIDECARS
     from pinecone_datasets_spark.operators.ivf import (
-        IVF_CENTROIDS_FILE,
         build_ivf_index,
         ivf_index_topk,
         load_ivf_index,
@@ -122,7 +122,7 @@ def test_build_load_index_roundtrip(spark, corpus, tmp_path):
     )
     # layout: one dir per cell + centroid sidecar
     entries = os.listdir(path)
-    assert IVF_CENTROIDS_FILE in entries
+    assert SIDECARS["ivf"] in entries
     assert any(e.startswith("ivf_cell=") for e in entries)
 
     docs, loaded, metric, cell_col = load_ivf_index(spark, path)

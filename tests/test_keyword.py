@@ -174,12 +174,10 @@ def test_merge_bm25_indexes_matches_full_rebuild(spark, sf_dir, tmp_path):
     )
     assert got == want
     # merged sidecar carries the union corpus scalars
-    import json
-    from pinecone_datasets_spark.fs import FS, join as fsjoin
-    from pinecone_datasets_spark.operators.keyword import BM25_STATS_FILE
+    from pinecone_datasets_spark import index_store
 
-    m = json.loads(FS(spark).read_text(fsjoin(merged, BM25_STATS_FILE)))
-    f = json.loads(FS(spark).read_text(fsjoin(full, BM25_STATS_FILE)))
+    m = index_store.load(spark, merged, "bm25")
+    f = index_store.load(spark, full, "bm25")
     assert m["n_docs"] == f["n_docs"]
     assert abs(m["avgdl"] - f["avgdl"]) < 1e-9
 

@@ -78,3 +78,18 @@ def test_self_match_rank1(spark, sf_dir, tmp_path):
     for qid, (did, score) in top1.items():
         assert qid == did  # a query always collides with itself
         assert score == pytest.approx(1.0, abs=1e-9)
+
+
+def test_failed_rebuild_leaves_no_index(spark, sf_dir, tmp_path):
+    """A rebuild that fails half-way must not leave the old sidecar
+    over the new tables: the vectors copy can finish before the
+    signatures rewrite fails, so an old sidecar would make the probe
+    score against the wrong vectors."""
+    docs, queries = _docs_queries(spark, sf_dir, nq=3)
+    path = str(tmp_path / "lsh_idx5")
+    build_lsh_index(docs, path, bands=2, bits=4, dim=64)
+    flat = docs.select("id", F.slice("values", 1, 2).alias("values"))
+    with pytest.raises(Exception):
+        build_lsh_index(flat, path, bands=2, bits=4, dim=64)
+    with pytest.raises(ValueError, match="no complete 'lsh' index"):
+        lsh_index_topk(spark, path, queries, k=3)

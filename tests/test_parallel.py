@@ -142,8 +142,9 @@ def test_concurrent_actions_runs_all_and_inherits_group(spark):
     """r14: index builds submit their independent writes through
     concurrent_actions — every fn must run, worker threads must inherit
     the caller's job group (plain pool threads would not), and the
-    group property must be cleared afterwards so later jobs on the
-    calling thread aren't tagged with a finished build's group."""
+    calling thread's group must be restored afterwards: cleared when it
+    had none, so later jobs aren't tagged with a finished build's group,
+    and the caller's own group when it had one."""
     import threading
 
     from pinecone_datasets_spark.parallel import concurrent_actions
@@ -172,6 +173,21 @@ def test_concurrent_actions_runs_all_and_inherits_group(spark):
     assert (
         spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
     )
+    # a caller's own group (a vbench span, a user's setJobGroup) is
+    # restored, not stripped
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-span", "caller work")
+    try:
+        concurrent_actions(spark, [probe_a, probe_b], "test build")
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-span"
+        assert sc.getLocalProperty("spark.job.description") == "caller work"
+    finally:
+        for prop in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(prop, None)
 
 
 def test_concurrent_actions_first_failure_propagates(spark):

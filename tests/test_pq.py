@@ -357,17 +357,30 @@ def test_ivfpq_refine_honors_custom_vector_col(spark, corpus, qmat, tmp_path):
     assert refined.count() == 5 * 3
 
 
-def test_ivfpq_empty_queries_returns_empty_frame(spark, corpus, tmp_path):
+@pytest.fixture(scope="module")
+def small_ivfpq(corpus, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("ivfpq_small"))
+    build_ivfpq_index(corpus, path, n_centroids=4, m=8, n_codes=16)
+    return path
+
+
+def test_ivfpq_empty_queries_returns_empty_frame(spark, small_ivfpq):
     """r11 review: an empty query frame (upstream filter matched
     nothing) crashed np.stack instead of returning zero rows."""
-    path = str(tmp_path / "ivfpq_empty")
-    build_ivfpq_index(corpus, path, n_centroids=4, m=8, n_codes=16)
+    path = small_ivfpq
     queries = spark.createDataFrame(
         [], "query_id long, vector array<double>"
     )
     res = ivfpq_index_topk(spark, path, queries, k=3, nprobe=2)
     assert res.columns == ["query_id", "id", "score", "rank"]
     assert res.count() == 0
+
+
+def test_load_ivf_index_names_the_kind_it_found(spark, small_ivfpq):
+    from pinecone_datasets_spark.operators.ivf import load_ivf_index
+
+    with pytest.raises(ValueError, match="holds a 'ivfpq' index"):
+        load_ivf_index(spark, small_ivfpq)
 
 
 def test_training_sample_pushdown_selects_same_rows(spark, corpus):

@@ -4,7 +4,8 @@ DuckDB and Python twins).
 
 One table: a base text with each of the six ASCII whitespace characters
 at its leading and at its trailing edge, plus NBSP at each edge, the
-empty text, an all-whitespace text and NULL. Edge whitespace of the
+empty text, an all-whitespace text, NULL, and a space before a trailing
+Unicode line terminator. Edge whitespace of the
 class must not change any operator's answer; NBSP is content, not
 whitespace. Each operator runs one Spark job over the whole table, and
 the helpers must agree exactly across Spark, DuckDB and Python.
@@ -37,6 +38,10 @@ ASCII_WS = (" ", "\t", "\n", "\r", "\f", "\x0b")
 EDGE_IDS = tuple(range(10, 10 + 2 * len(ASCII_WS)))
 NBSP_IDS = (30, 31)
 EMPTY_ID, ALL_WS_ID, NULL_ID = 40, 41, 42
+#: a trailing space before a Unicode line terminator (U+2028, U+0085,
+#: U+2029): the space is whitespace, the terminator is content, in
+#: every engine (Java's ``$`` would match before the terminator)
+LINE_SEP_IDS = (50, 51, 52)
 
 ROWS = (
     [(BASE_ID, BASE)]
@@ -44,6 +49,10 @@ ROWS = (
     + [(10 + len(ASCII_WS) + i, BASE + ch) for i, ch in enumerate(ASCII_WS)]
     + [(NBSP_IDS[0], "\xa0" + BASE), (NBSP_IDS[1], BASE + "\xa0")]
     + [(EMPTY_ID, ""), (ALL_WS_ID, "".join(ASCII_WS)), (NULL_ID, None)]
+    + [
+        (i, "alpha " + ch)
+        for i, ch in zip(LINE_SEP_IDS, ("\u2028", "\x85", "\u2029"))
+    ]
 )
 
 
@@ -59,8 +68,9 @@ def _by_id(df, col):
 def test_exact_dedup_folds_class_edges_and_keeps_nbsp(docs):
     kept = {r["doc_id"] for r in exact_dedup(docs).select("doc_id").collect()}
     # every class-edge variant folds into BASE; the all-whitespace text
-    # folds into the empty one; NBSP texts are distinct content
-    assert kept == {BASE_ID, *NBSP_IDS, EMPTY_ID, NULL_ID}
+    # folds into the empty one; NBSP and line-terminator texts are
+    # distinct content
+    assert kept == {BASE_ID, *NBSP_IDS, EMPTY_ID, NULL_ID, *LINE_SEP_IDS}
 
 
 def test_simhash64_ignores_class_edges(docs):
