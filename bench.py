@@ -614,8 +614,7 @@ def main() -> None:
         from pinecone_datasets_spark.operators.ivf import build_ivf_index
 
         docs, _ = emb_queries(0)
-        build_ivf_index(docs, ivf_path, n_centroids=16,
-                        vector_col="values", trainer="local")
+        build_ivf_index(docs, ivf_path, n_centroids=16, vector_col="values")
         return spark.range(1)
 
     def bench_ivf_search():

@@ -113,12 +113,6 @@ def conform(
     return df.select(*projection)
 
 
-def conform_documents(
-    df: DataFrame, column_mapping: Optional[Mapping[str, str]] = None
-) -> DataFrame:
-    return conform(df, "documents", column_mapping)
-
-
 def conform_queries(
     df: DataFrame, column_mapping: Optional[Mapping[str, str]] = None
 ) -> DataFrame:

@@ -32,10 +32,9 @@ Reference scope note: no text edge in the reference; Layer-B extension
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 

@@ -666,6 +666,8 @@ def line_stats_sql(text_expr: str) -> dict:
 #: of terminal punctuation that ends it (a trailing fragment keeps its
 #: words even without punctuation). Portable: no lookaround.
 SENTENCE_PATTERN = r"[^.!?]+[.!?]*"
+# a sentence's edge whitespace (\z, not $: see _EDGE_SPACE_PATTERN)
+_SENTENCE_EDGE_PATTERN = rf"{WHITESPACE_RUN_PATTERN}\z|^{WHITESPACE_RUN_PATTERN}"
 
 
 def split_sentences(text: ColumnOrName) -> Column:
@@ -677,7 +679,7 @@ def split_sentences(text: ColumnOrName) -> Column:
     return F.filter(
         F.transform(
             F.regexp_extract_all(_c(text), F.lit(SENTENCE_PATTERN), 0),
-            lambda s: F.regexp_replace(s, WHITESPACE_RUN_PATTERN + "$|^" + WHITESPACE_RUN_PATTERN, ""),
+            lambda s: F.regexp_replace(s, _SENTENCE_EDGE_PATTERN, ""),
         ),
         lambda s: s != "",
     )
@@ -701,11 +703,10 @@ def sentence_ngrams(text: ColumnOrName, n: int = 3) -> Column:
 def split_sentences_sql(text_expr: str) -> str:
     """DuckDB twin of ``split_sentences``."""
     pat = SENTENCE_PATTERN.replace("'", "''")
-    ws = WHITESPACE_RUN_PATTERN.replace("'", "''")
     return (
         f"list_filter(list_transform("
         f"regexp_extract_all({text_expr}, '{pat}'),"
-        f" s -> regexp_replace(s, '{ws}$|^{ws}', '', 'g')),"
+        f" s -> regexp_replace(s, '{_SENTENCE_EDGE_PATTERN}', '', 'g')),"
         f" s -> s <> '')"
     )
 

@@ -27,7 +27,7 @@ with ``unit_rows``.
 
 from __future__ import annotations
 
-from typing import Iterator, Union
+from typing import Union
 
 import numpy as np
 import pandas as pd

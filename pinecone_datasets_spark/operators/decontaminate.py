@@ -58,14 +58,6 @@ def _ngrams_of(toks: Column, n: int) -> Column:
     )
 
 
-def word_ngrams(text_col: str, n: int) -> Column:
-    """Array of distinct word n-grams straight from a text column — for
-    expression contexts and small inputs. Corpus-scale callers go
-    through ``ngram_contamination``, which materializes the word array
-    first (see ``_ngrams_of``)."""
-    return _ngrams_of(words(F.lower(F.col(text_col))), n)
-
-
 def _grams_table(
     df, text_col: str, n: int, *keep: str
 ):

@@ -62,11 +62,6 @@ _BLOCKSIZE_CODES = {
     13: 8192, 14: 16384, 15: 32768,
 }
 
-_RATE_CODES = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
-
 _SIZE_CODES = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24}
 
 

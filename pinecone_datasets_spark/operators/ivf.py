@@ -8,7 +8,7 @@ assignment is a *stored* column, a cell-partitioned layout gets partition
 pruning from the Parquet reader for free.
 
 Plan shape:
-  build: sample -> KMeans.fit (driver-coordinated MLlib job) ->
+  build: one sample collect -> driver-side seeded Lloyd (NumPy) ->
          assign cells via one matmul kernel (map-only, no shuffle)
   query: per query pick nprobe cells (tiny driver/broadcast compute) ->
          explode -> shuffle-hash join on cell id -> exact re-score ->
@@ -107,34 +107,29 @@ def _assign_udf(centroids: np.ndarray, normalize: bool):
     return F.pandas_udf(kernel, IntegerType()).asNondeterministic()
 
 
-def train_centroids(
+def _sample_matrix(
     documents: DataFrame,
-    n_centroids: int = 16,
-    vector_col: str = "values",
-    sample_fraction: Optional[float] = None,
-    seed: int = 42,
-    max_iter: int = 20,
+    vector_col: str,
+    sample_cap: int,
+    seed: int,
+    n_rows: Optional[int] = None,
+    fraction: Optional[float] = None,
 ) -> np.ndarray:
-    """KMeans centroids from a (sampled) corpus via MLlib.
+    """(rows, dim) float64 matrix of a seeded Bernoulli sample of
+    ``vector_col`` — the one collect job behind the driver-side trainers.
 
-    Sampling bounds the training cost: centroids need only represent the
-    distribution, so a ~100k-row sample suffices regardless of corpus
-    size (sample_fraction=None auto-sizes to that budget).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    ``fraction`` is used as-is when given; otherwise it is sized so the
+    sample holds about ``sample_cap`` rows, from ``n_rows`` when the
+    caller already knows the row count, else from a count job."""
+    if fraction is None:
+        n = documents.count() if n_rows is None else int(n_rows)
+        fraction = min(1.0, sample_cap / max(n, 1))
     src = documents.select(F.col(vector_col).alias("_v"))
-    if sample_fraction is None:
-        n = documents.count()
-        sample_fraction = min(1.0, 100_000 / max(n, 1))
-    if sample_fraction < 1.0:
-        src = src.sample(fraction=sample_fraction, seed=seed)
-    train = src.select(array_to_vector(F.col("_v")).alias("features"))
-    model = KMeans(
-        k=n_centroids, seed=seed, maxIter=max_iter, featuresCol="features"
-    ).fit(train)
-    return np.array([np.asarray(c) for c in model.clusterCenters()])
+    if fraction < 1.0:
+        src = src.sample(fraction=fraction, seed=seed)
+    return np.asarray(
+        [np.asarray(v, dtype=np.float64) for (v,) in src.collect()]
+    )
 
 
 def train_centroids_local(
@@ -153,7 +148,7 @@ def train_centroids_local(
     represent the *distribution*, so training runs on a bounded sample
     (``sample_cap`` rows — ~50 MB at dim 64) regardless of corpus size.
     Collecting that sample is ONE Spark job; every Lloyd iteration is then
-    a local BLAS matmul (~ms), where the MLlib path pays a full
+    a local BLAS matmul (~ms), where a distributed KMeans pays a full
     driver-coordinated job per iteration — ~20 jobs of fixed overhead
     that dwarf the actual math at any corpus size. Deterministic for a
     fixed (seed, sample): init picks ``n_centroids`` distinct sample rows.
@@ -161,14 +156,7 @@ def train_centroids_local(
     ``n_rows``: the frame's row count when the caller already knows it
     (sizes the sample fraction only) — saves the count job (r13).
     """
-    n = documents.count() if n_rows is None else int(n_rows)
-    frac = min(1.0, sample_cap / max(n, 1))
-    src = documents.select(F.col(vector_col).alias("_v"))
-    if frac < 1.0:
-        src = src.sample(fraction=frac, seed=seed)
-    m = np.asarray(
-        [np.asarray(v, dtype=np.float64) for (v,) in src.collect()]
-    )
+    m = _sample_matrix(documents, vector_col, sample_cap, seed, n_rows)
     rng = np.random.default_rng(seed)
     init_idx = rng.choice(len(m), size=min(n_centroids, len(m)), replace=False)
     c = m[np.sort(init_idx)].copy()
@@ -222,13 +210,13 @@ def ivf_topk(
     The probe set rides with the (small, broadcast) queries side; the join
     on cell id is the only shuffle of corpus rows, and it moves just the
     probed fraction. ``cell_ids`` maps centroid rows to cell ids when the
-    codebook is sparse (bucket quantizers can have empty cells).
+    codebook is sparse (``train_centroids_inplan`` drops empty cells).
     """
     c = np.ascontiguousarray(centroids, dtype=np.float64)
     cn = unit_rows(c)
 
     # Centroid row i belongs to cell id cell_ids[i] (dense 0..n-1 by
-    # default; sparse for bucket-quantizer codebooks with empty cells).
+    # default; sparse for codebooks that dropped empty cells).
     ids = list(cell_ids) if cell_ids is not None else list(range(len(c)))
 
     def probes(vec) -> list[int]:
@@ -476,71 +464,6 @@ def ivf_topk_inplan(
     )
 
 
-def srp_codebook(
-    documents: DataFrame,
-    vector_col: str = "values",
-    bits: int = 3,
-    seed: int = 13,
-    scale: int = 1000,
-    cell_col: str = "ivf_cell",
-):
-    """Engine-portable IVF codebook: cells are the sign-random-projection
-    buckets (``semdedup.srp_cells`` — the md5-parity ±1 matrix), and each
-    cell's centroid is the element-wise mean of its members'
-    ``scale``-quantized vectors.
-
-    Why this exists alongside the KMeans trainers: the cell function and
-    the centroids are *bit-reproducible in any engine* — the projection
-    matrix derives from md5 parity, and the centroid means are ratios of
-    **integer** sums (integer addition is associative, so aggregation
-    order can't perturb them) — which is what lets an IVF search carry a
-    value-level SQL oracle (``__spark_entry__.q35_ivf_topk``). As a
-    quantizer it is FAISS's IVF with a data-independent coarse codebook:
-    assignment is map-only (no training pass over the corpus at all),
-    at the cost of cells that are less adapted than KMeans' — the recall
-    certificate quantifies that trade.
-
-    Returns ``(documents_with_cells, centroids, cell_ids)``: centroids is
-    a (n_nonempty_cells, dim) float64 matrix, ``cell_ids[i]`` the bucket
-    id of row i. The only collect is the codebook itself (≤ 2**bits
-    rows).
-    """
-    from .semdedup import srp_cells
-
-    dim = len(
-        documents.select(vector_col).limit(1).collect()[0][vector_col]
-    )
-    with_cells = srp_cells(
-        documents, vector_col, dim, bits, seed, cell_col
-    )
-    sums = (
-        with_cells.select(
-            F.col(cell_col),
-            F.posexplode(
-                F.expr(
-                    f"transform({vector_col},"
-                    f" x -> CAST(round(x * {scale}) AS BIGINT))"
-                )
-            ).alias("dim", "q"),
-        )
-        .groupBy(cell_col, "dim")
-        .agg(F.sum("q").alias("s"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    by_cell: dict[int, np.ndarray] = {}
-    counts: dict[int, int] = {}
-    for r in sums:
-        cell = int(r[cell_col])
-        arr = by_cell.setdefault(cell, np.zeros(dim, dtype=np.float64))
-        arr[int(r["dim"])] = float(r["s"])
-        counts[cell] = int(r["n"])
-    cell_ids = sorted(by_cell)
-    centroids = np.stack(
-        [by_cell[cid] / counts[cid] for cid in cell_ids]
-    )
-    return with_cells, centroids, cell_ids
-
-
 # ---------------------------------------------------------------------------
 # Persisted index: cell-partitioned parquet layout + centroid sidecar
 # ---------------------------------------------------------------------------
@@ -554,8 +477,7 @@ def build_ivf_index(
     metric: str = "cosine",
     cell_col: str = "ivf_cell",
     seed: int = 42,
-    sample_fraction: Optional[float] = None,
-    trainer: str = "mllib",
+    trainer: str = "local",
 ) -> np.ndarray:
     """Train, assign, and persist the IVF layout in one call.
 
@@ -565,27 +487,16 @@ def build_ivf_index(
     in a JSON sidecar next to the data so a later session can search
     without retraining. Returns the centroid matrix.
 
-    ``trainer="local"`` uses the driver-side seeded Lloyd trainer (one
-    collect job on a bounded sample instead of ~2 MLlib jobs per
-    iteration); ``"mllib"`` keeps the distributed KMeans.
+    Centroids come from ``train_centroids_local`` (one collect job on a
+    bounded sample, then driver-side Lloyd). ``trainer`` accepts only
+    ``"local"``; it is kept because callers pass it (the vbench search
+    family does), and any other value raises ``ValueError``.
     """
-    if trainer == "local":
-        centroids = train_centroids_local(
-            documents,
-            n_centroids=n_centroids,
-            vector_col=vector_col,
-            seed=seed,
-        )
-    elif trainer == "mllib":
-        centroids = train_centroids(
-            documents,
-            n_centroids=n_centroids,
-            vector_col=vector_col,
-            sample_fraction=sample_fraction,
-            seed=seed,
-        )
-    else:
+    if trainer != "local":
         raise ValueError(f"unknown trainer: {trainer}")
+    centroids = train_centroids_local(
+        documents, n_centroids=n_centroids, vector_col=vector_col, seed=seed
+    )
     assigned = assign_cells(
         documents, centroids, vector_col=vector_col,
         metric=metric, cell_col=cell_col,

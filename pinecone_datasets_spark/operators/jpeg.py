@@ -31,7 +31,6 @@ never decodes (``cfg.py:23-36``); Layer-B extension.
 from __future__ import annotations
 
 import struct
-from typing import Optional
 
 import numpy as np
 

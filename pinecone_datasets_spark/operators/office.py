@@ -39,7 +39,7 @@ import re
 import zipfile
 import struct
 import zlib
-from typing import Iterator, Optional
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame

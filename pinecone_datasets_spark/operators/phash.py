@@ -32,7 +32,7 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd

@@ -47,7 +47,8 @@ from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
 from .. import index_store
 from ..functions.vector import NORM_FLOOR, unit_rows
-from .ivf import _nearest, _sq_dists, assign_cells, train_centroids_local
+from .ivf import _nearest, _sample_matrix, _sq_dists, assign_cells
+from .ivf import train_centroids_local
 from .sampling import cap_per_group
 
 
@@ -131,14 +132,8 @@ def train_pq_codebooks(
     """
     if sample_cap is None:
         sample_cap = max(10_000, 64 * n_codes)
-    if sample_fraction is None:
-        n = documents.count() if n_rows is None else int(n_rows)
-        sample_fraction = min(1.0, sample_cap / max(n, 1))
-    src = documents.select(F.col(vector_col).alias("_v"))
-    if sample_fraction < 1.0:
-        src = src.sample(fraction=sample_fraction, seed=seed)
-    sample = np.asarray(
-        [np.asarray(v, dtype=np.float64) for (v,) in src.collect()]
+    sample = _sample_matrix(
+        documents, vector_col, sample_cap, seed, n_rows, sample_fraction
     )
     dim = sample.shape[1]
     if dim % m != 0:

@@ -28,7 +28,7 @@ would surface each unmatched build row once per replica and are rejected.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SALT = "__salt"
@@ -74,24 +74,3 @@ def salted_join(
     out = p.join(b, on=[*keys, _SALT], how=how)
     return out.drop(_SALT)
 
-
-def key_skew_profile(
-    df: DataFrame, on: str | list[str], top: int = 20
-) -> DataFrame:
-    """Diagnostic: per-key row counts and share of total for the heaviest
-    keys — the number you look at before choosing ``salts``."""
-    keys = [on] if isinstance(on, str) else list(on)
-    # total from the (tiny) per-key aggregate — but NOT via an
-    # unpartitioned window (that funnels every distinct key through one
-    # task, the very bottleneck this diagnostic hunts); instead a
-    # broadcast single-row crossJoin of the aggregate's own sum, the
-    # tf_idf/unigram_logprob pattern. Still one scan of the base table.
-    per_key = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows"))
-    total = per_key.agg(F.sum("n_rows").alias("_total"))
-    return (
-        per_key.crossJoin(F.broadcast(total))
-        .withColumn("share", F.round(F.col("n_rows") / F.col("_total"), 6))
-        .drop("_total")
-        .orderBy(F.col("n_rows").desc(), *keys)
-        .limit(top)
-    )

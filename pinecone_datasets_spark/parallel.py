@@ -143,11 +143,11 @@ def concurrent_actions(spark, fns, description: str) -> None:
     next job's tasks back-fill executors freed by the current job's
     straggler tail (guide §2.6) — with Spark-aware thread semantics:
 
-    * each worker is wrapped in ``pyspark.inheritable_thread_target``,
-      so it inherits the caller's job group/description (UI labels stay
-      correct and a caller-initiated ``cancelJobGroup`` reaches these
-      jobs — plain pool threads would NOT inherit the thread-local
-      properties, r13 ADVICE);
+    * each worker is wrapped in ``inheritable_thread_target(spark)``, so
+      it inherits the caller's job group, description and tags (UI
+      labels stay correct and a caller's ``cancelJobGroup`` or
+      ``spark.interruptTag`` reaches these jobs — plain pool threads
+      would NOT inherit the thread-local properties, r13 ADVICE);
     * the first failure cancels the sibling jobs via the shared group
       instead of letting them run to completion, then re-raises.
     """
@@ -171,9 +171,12 @@ def concurrent_actions(spark, fns, description: str) -> None:
     sc.setJobGroup(group, description, interruptOnCancel=True)
     try:
         with ThreadPoolExecutor(max_workers=max(2, len(fns))) as pool:
-            futs = [
-                pool.submit(inheritable_thread_target(fn)) for fn in fns
-            ]
+            inherit = inheritable_thread_target(spark)
+            if inherit is spark:
+                # pinned-thread mode off: PySpark hands the session back
+                # and there are no thread-local properties to carry
+                inherit = lambda fn: fn  # noqa: E731
+            futs = [pool.submit(inherit(fn)) for fn in fns]
             done, not_done = wait(futs, return_when=FIRST_EXCEPTION)
             first_exc = next(
                 (f.exception() for f in done if f.exception() is not None),

@@ -25,7 +25,7 @@ length gate → quality gate → (optional) DSIR gate → exact dedup.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd

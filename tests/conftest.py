@@ -20,14 +20,6 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "4g")
     )
-    # tools/partest.py shards the suite across worker processes; each
-    # worker gets its own warehouse so managed-table tests (bucketing)
-    # don't collide on ./spark-warehouse
-    shard = os.environ.get("SPARK_GRAFT_TEST_SHARD")
-    if shard:
-        builder = builder.config(
-            "spark.sql.warehouse.dir", f"/tmp/psds_test_wh_{shard}"
-        )
     spark = builder.getOrCreate()
     yield spark
     spark.stop()

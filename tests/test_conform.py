@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as T
 
-from pinecone_datasets_spark.conform import conform_documents, conform_queries
+from pinecone_datasets_spark.conform import conform, conform_queries
 from pinecone_datasets_spark.cfg import DOCUMENTS_SCHEMA, QUERIES_SCHEMA
 
 
@@ -15,7 +15,7 @@ def test_documents_happy_path(spark):
         [("1", [0.1, 0.2], None, '{"a":1}', None)],
         schema=DOCUMENTS_SCHEMA,
     )
-    out = conform_documents(df)
+    out = conform(df, "documents")
     assert [f.name for f in out.schema.fields] == [
         "id",
         "values",
@@ -29,7 +29,7 @@ def test_documents_happy_path(spark):
 def test_documents_missing_required_raises(spark):
     df = spark.createDataFrame([("1",)], schema="id string")
     with pytest.raises(ValueError, match="values not found"):
-        conform_documents(df)
+        conform(df, "documents")
 
 
 def test_queries_missing_required_raises(spark):
@@ -65,7 +65,7 @@ def test_minimal_docs_backfilled(spark):
     df = spark.createDataFrame(
         [("1", [0.1])], schema="id string, values array<float>"
     )
-    out = conform_documents(df)
+    out = conform(df, "documents")
     row = out.collect()[0]
     assert row["sparse_values"] is None
     assert row["metadata"] is None
@@ -77,7 +77,7 @@ def test_extra_columns_dropped(spark):
         [("1", [0.1], "junk")],
         schema="id string, values array<float>, extra_column string",
     )
-    out = conform_documents(df)
+    out = conform(df, "documents")
     assert "extra_column" not in out.columns
 
 
@@ -85,7 +85,7 @@ def test_column_mapping_rename(spark):
     df = spark.createDataFrame(
         [("1", [0.1])], schema="pk string, emb array<float>"
     )
-    out = conform_documents(df, {"pk": "id", "emb": "values"})
+    out = conform(df, "documents", {"pk": "id", "emb": "values"})
     assert out.collect()[0]["id"] == "1"
 
 
@@ -94,6 +94,6 @@ def test_cast_types(spark):
     df = spark.createDataFrame(
         [("1", [0.1, 0.2])], schema="id string, values array<double>"
     )
-    out = conform_documents(df)
+    out = conform(df, "documents")
     vtype = dict(zip(out.columns, [f.dataType for f in out.schema.fields]))
     assert vtype["values"] == T.ArrayType(T.FloatType())

@@ -199,14 +199,14 @@ def test_conform_struct_metadata_becomes_json(spark):
     JSON — iter_documents then silently yielded garbage strings."""
     import json as _json
 
-    from pinecone_datasets_spark.conform import conform_documents
+    from pinecone_datasets_spark.conform import conform
 
     df = spark.createDataFrame(
         [("a", [0.1, 0.2], {"lang": "en", "score": 3})],
         "id string, values array<float>, "
         "metadata struct<lang: string, score: int>",
     )
-    out = conform_documents(df).collect()[0]
+    out = conform(df, "documents").collect()[0]
     assert _json.loads(out["metadata"]) == {"lang": "en", "score": 3}
 
 
@@ -214,14 +214,14 @@ def test_conform_incompatible_nullable_warns(spark):
     """Dropping an optional column's data must warn, not be silent."""
     import warnings as _warnings
 
-    from pinecone_datasets_spark.conform import conform_documents
+    from pinecone_datasets_spark.conform import conform
 
     df = spark.createDataFrame(
         [("a", [0.1], 7)], "id string, values array<float>, blob int"
     )
     with _warnings.catch_warnings(record=True) as caught:
         _warnings.simplefilter("always")
-        conform_documents(df)
+        conform(df, "documents")
     # blob int -> target type incompatible? if castable no warning is
     # fine; assert the mechanism by feeding a truly incompatible one
     df2 = spark.createDataFrame(
@@ -236,7 +236,7 @@ def test_conform_incompatible_nullable_warns(spark):
     )
     with _warnings.catch_warnings(record=True) as caught3:
         _warnings.simplefilter("always")
-        out = conform_documents(df3).collect()[0]
+        out = conform(df3, "documents").collect()[0]
     assert out["sparse_values"] is None
     assert any("not carried" in str(w.message) for w in caught3)
 
@@ -255,7 +255,7 @@ def test_write_dataset_overwrite_removes_stale_queries(spark, tmp_path):
         [([0.1, 0.2], 5)], "vector array<float>, top_k int"
     )
     from pinecone_datasets_spark.conform import (
-        conform_documents,
+        conform,
         conform_queries,
     )
     from pinecone_datasets_spark.metadata import (
@@ -268,14 +268,14 @@ def test_write_dataset_overwrite_removes_stale_queries(spark, tmp_path):
         dense_model=DenseModelMetadata(name="m", dimension=2),
     )
     ds1 = Dataset(
-        spark, documents=conform_documents(docs),
+        spark, documents=conform(docs, "documents"),
         queries=conform_queries(queries), metadata=md,
     )
     ds1.to_path(path)
     assert Dataset.from_path(spark, path).queries.count() == 1
 
     ds2 = Dataset(
-        spark, documents=conform_documents(docs),
+        spark, documents=conform(docs, "documents"),
         queries=conform_queries(
             spark.createDataFrame([], "vector array<float>, top_k int")
         ),

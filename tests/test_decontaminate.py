@@ -6,9 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pinecone_datasets_spark.operators.decontaminate import (
+    _grams_table,
     decontaminate,
     ngram_contamination,
-    word_ngrams,
 )
 
 from conftest import TESTDATA
@@ -20,20 +20,21 @@ def docs(spark):
 
 
 def test_word_ngrams_known_answer(spark):
+    """The word n-grams ngram_contamination builds (``_grams_table``):
+    lower-cased, distinct, of size exactly n."""
     df = spark.createDataFrame(
         [(1, "The quick  brown fox"), (2, "a b"), (3, "  "), (4, None)],
         "id long, text string",
     )
     got = {
-        r["id"]: sorted(r["g"])
-        for r in df.select("id", word_ngrams("text", 3).alias("g")).collect()
+        r["id"]: None if r["_grams"] is None else sorted(r["_grams"])
+        for r in _grams_table(df, "text", 3, "id").collect()
     }
-    assert got[1] == ["brown fox", "fox", "quick brown", "quick brown fox",
-                      "the quick", "the quick brown"] or True
+    assert got[1] == ["quick brown fox", "the quick brown"]
     # exact semantics: n-grams of size exactly 3
     df3 = spark.createDataFrame([(1, "x y z w")], "id long, text string")
-    (row,) = df3.select(word_ngrams("text", 3).alias("g")).collect()
-    assert sorted(row["g"]) == ["x y z", "y z w"]
+    (row,) = _grams_table(df3, "text", 3).collect()
+    assert sorted(row["_grams"]) == ["x y z", "y z w"]
     assert got[2] == []  # shorter than n
     assert got[3] == []  # whitespace only
     assert got[4] is None or got[4] == []  # null text

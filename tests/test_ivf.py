@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pinecone_datasets_spark.operators.ivf import (
     assign_cells,
     ivf_topk,
-    train_centroids,
+    train_centroids_local,
 )
 from pinecone_datasets_spark.operators.search import topk_search
 
@@ -23,7 +23,7 @@ def corpus(spark, sf_dir):
 
 
 def test_ivf_recall(spark, corpus):
-    centroids = train_centroids(corpus, n_centroids=8, max_iter=10)
+    centroids = train_centroids_local(corpus, n_centroids=8, max_iter=10)
     assert centroids.shape == (8, 64)
     with_cells = assign_cells(corpus, centroids).cache()
     # every doc lands in exactly one valid cell
@@ -67,7 +67,7 @@ def test_ivf_string_ids_and_double_vectors(spark, corpus):
         F.col("id").cast("string").alias("id"),
         F.col("values").cast("array<double>").alias("values"),
     )
-    centroids = train_centroids(docs, n_centroids=4, max_iter=5)
+    centroids = train_centroids_local(docs, n_centroids=4, max_iter=5)
     with_cells = assign_cells(docs, centroids)
     queries = docs.where(F.col("id").isin("0", "1")).select(
         F.col("id").alias("query_id"), F.col("values").alias("vector")
@@ -85,7 +85,7 @@ def test_ivf_string_ids_and_double_vectors(spark, corpus):
 def test_ivf_probes_fraction(spark, corpus):
     """With nprobe=1 each query's candidates come from one cell — the scan
     fraction is bounded by the largest single cell."""
-    centroids = train_centroids(corpus, n_centroids=8, max_iter=10)
+    centroids = train_centroids_local(corpus, n_centroids=8, max_iter=10)
     with_cells = assign_cells(corpus, centroids)
     queries = corpus.where(F.col("id") < 3).select(
         F.col("id").alias("query_id"), F.col("values").alias("vector")
@@ -111,7 +111,6 @@ def test_build_load_index_roundtrip(spark, corpus, tmp_path):
         build_ivf_index,
         ivf_index_topk,
         load_ivf_index,
-        train_centroids,
         assign_cells,
         ivf_topk,
     )
@@ -302,26 +301,6 @@ def test_ivf_topk_inplan_matches_numpy_probe_variant(spark, corpus):
     assert got == want
 
 
-def test_srp_codebook_cells_and_sparse_ids(spark, corpus):
-    """Bucket-quantizer codebook: cells are SRP buckets, centroids are
-    integer-exact member means, and cell_ids tracks non-empty buckets."""
-    from pinecone_datasets_spark.operators.ivf import srp_codebook
-
-    docs = corpus.select(
-        "id", F.col("values").cast("array<double>").alias("values")
-    )
-    with_cells, cents, cids = srp_codebook(docs, bits=3, seed=13)
-    assert cents.shape[1] == 64
-    assert len(cids) == cents.shape[0] <= 8
-    counts = {
-        r["ivf_cell"]: r["n"]
-        for r in with_cells.groupBy("ivf_cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert sorted(counts) == cids
-
-
 def test_ivf_filtered_search_pushdown_and_pruning(spark, sf_dir, tmp_path):
     """Metadata-filtered ANN — the canonical vector-db query: an
     attribute predicate composes with the persisted IVF layout so BOTH
@@ -379,7 +358,7 @@ def test_metadata_filtered_ivf_composes(spark, corpus):
     only matching docs, and with nprobe = n_cells equals the exact
     filtered top-k — the contract that lets compile_filter() slot
     straight in front of any IVF search."""
-    centroids = train_centroids(corpus, n_centroids=4, max_iter=5)
+    centroids = train_centroids_local(corpus, n_centroids=4, max_iter=5)
     with_cells = assign_cells(corpus, centroids)
     flt = F.col("id") % 3 == 0
     queries = corpus.where(F.col("id") < 5).select(

@@ -190,6 +190,57 @@ def test_concurrent_actions_runs_all_and_inherits_group(spark):
             sc.setLocalProperty(prop, None)
 
 
+def test_concurrent_actions_passes_caller_tags(spark):
+    """Worker threads carry the caller's session tags, so
+    ``spark.interruptTag`` reaches their jobs, and wrapping them raises
+    no "Tags will not be inherited" warning.
+
+    The tag goes on a child session: on Spark 4.1, ``addTag`` leaves the
+    session's thread-UUID holder set, and a session in that state can no
+    longer be serialized into MLlib closures (a fitted
+    ``LogisticRegressionModel`` keeps it in its training summary), which
+    would break later tests that share the fixture session."""
+    import warnings
+
+    from pinecone_datasets_spark.parallel import concurrent_actions
+
+    session = spark.newSession()
+    seen = []
+
+    def probe():
+        seen.append(set(session.getTags()))
+        session.range(10).count()
+
+    session.addTag("caller-tag")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            concurrent_actions(session, [probe, probe], "tagged build")
+    finally:
+        session.removeTag("caller-tag")
+    assert len(seen) == 2
+    assert all("caller-tag" in tags for tags in seen)
+    assert not [
+        w for w in caught if "Tags will not be inherited" in str(w.message)
+    ]
+
+
+def test_concurrent_actions_without_pinned_threads(spark, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, ``inheritable_thread_target(spark)``
+    returns the session itself (not a wrapper); every action must still
+    run."""
+    import pyspark
+
+    from pinecone_datasets_spark.parallel import concurrent_actions
+
+    monkeypatch.setattr(pyspark, "inheritable_thread_target", lambda f: f)
+    ran = []
+    concurrent_actions(
+        spark, [lambda: ran.append("a"), lambda: ran.append("b")], "unpinned"
+    )
+    assert sorted(ran) == ["a", "b"]
+
+
 def test_concurrent_actions_first_failure_propagates(spark):
     """The first worker failure is re-raised (not swallowed, not
     replaced by a sibling's cancellation error)."""

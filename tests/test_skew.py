@@ -5,10 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pinecone_datasets_spark.operators.skew import (
-    key_skew_profile,
-    salted_join,
-)
+from pinecone_datasets_spark.operators.skew import salted_join
 from pinecone_datasets_spark.plans.explain import formatted_plan
 
 
@@ -79,46 +76,3 @@ def test_duplicate_probe_rows_preserved(spark):
     out = salted_join(probe, build, on="k", salts=4)
     assert out.count() == 2
 
-
-def test_key_skew_profile(skewed):
-    probe, _ = skewed
-    prof = key_skew_profile(probe, "k", top=3).collect()
-    assert prof[0].k == 0 and prof[0].n_rows == 900
-    assert abs(prof[0].share - 0.9) < 1e-9
-
-
-def test_key_skew_profile_single_scan_and_share(spark):
-    """r11 review: the share denominator came from a separate full
-    df.count() action (second scan of a possibly-100TB table); it now
-    derives from the per-key aggregate itself. Shares must still sum to
-    1 over all keys."""
-    from pinecone_datasets_spark.operators.skew import key_skew_profile
-
-    df = spark.createDataFrame(
-        [(k,) for k in ["a"] * 6 + ["b"] * 3 + ["c"]], "k string"
-    )
-    rows = key_skew_profile(df, "k", top=10).collect()
-    assert [(r["k"], r["n_rows"]) for r in rows] == [
-        ("a", 6), ("b", 3), ("c", 1)
-    ]
-    assert abs(sum(r["share"] for r in rows) - 1.0) < 1e-9
-    assert rows[0]["share"] == 0.6
-
-
-def test_key_skew_profile_no_global_window(spark):
-    """r11 ADVICE: the share denominator used an unpartitioned window
-    over the per-key aggregate — a single-reducer funnel for exactly
-    the high-cardinality-key case this diagnostic targets. It must now
-    come from a broadcast single-row crossJoin: no Window operator in
-    the physical plan at all."""
-    from pinecone_datasets_spark.operators.skew import key_skew_profile
-
-    df = spark.createDataFrame(
-        [(k,) for k in ["a"] * 6 + ["b"] * 3 + ["c"]], "k string"
-    )
-    prof = key_skew_profile(df, "k", top=10)
-    plan = prof._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    rows = prof.collect()
-    assert abs(sum(r["share"] for r in rows) - 1.0) < 1e-9

@@ -1,6 +1,7 @@
-"""Edge-whitespace contract of the word tokenizer and the whitespace
-normalizer (functions/text.py ``words`` / ``normalize_ws`` and their
-DuckDB and Python twins).
+"""Edge-whitespace contract of the word tokenizer, the whitespace
+normalizer and the sentence splitter (functions/text.py ``words`` /
+``normalize_ws`` / ``split_sentences`` and their DuckDB and Python
+twins).
 
 One table: a base text with each of the six ASCII whitespace characters
 at its leading and at its trailing edge, plus NBSP at each edge, the
@@ -13,15 +14,21 @@ the helpers must agree exactly across Spark, DuckDB and Python.
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from pinecone_datasets_spark.functions.text import (
+    SENTENCE_PATTERN,
+    WHITESPACE_RUN_PATTERN,
     normalize_ws,
     normalize_ws_sql,
     rolling_hash_fingerprint,
+    split_sentences,
+    split_sentences_sql,
     split_words,
     stopword_ratio,
     word_count,
@@ -125,32 +132,46 @@ def test_bm25_term_sets_ignore_class_edges(docs):
     assert not {EMPTY_ID, ALL_WS_ID, NULL_ID} & set(terms)
 
 
+def _split_sentences_py(t: str) -> list[str]:
+    """Python twin of ``split_sentences`` (``\\Z`` is Python's
+    end-of-text anchor)."""
+    edge = re.compile(
+        WHITESPACE_RUN_PATTERN + r"\Z|^" + WHITESPACE_RUN_PATTERN
+    )
+    return [
+        e for e in (edge.sub("", x) for x in re.findall(SENTENCE_PATTERN, t))
+        if e
+    ]
+
+
 def test_helpers_agree_across_spark_duckdb_python(docs):
     spark_rows = {
-        r["doc_id"]: (r["w"], r["n"])
+        r["doc_id"]: (r["w"], r["n"], r["s"])
         for r in docs.select(
             "doc_id",
             words(F.col("text")).alias("w"),
             normalize_ws(F.col("text")).alias("n"),
+            split_sentences(F.col("text")).alias("s"),
         ).collect()
     }
     con = duckdb.connect()
     con.register("t", pd.DataFrame(ROWS, columns=["doc_id", "text"]))
     duck_rows = {
-        i: (w, n)
-        for i, w, n in con.execute(
-            f"SELECT doc_id, {words_sql('text')}, {normalize_ws_sql('text')}"
-            " FROM t"
+        i: (w, n, s)
+        for i, w, n, s in con.execute(
+            f"SELECT doc_id, {words_sql('text')}, {normalize_ws_sql('text')},"
+            f" {split_sentences_sql('text')} FROM t"
         ).fetchall()
     }
     con.close()
     py_rows = {
-        i: (None, None)
+        i: (None, None, None)
         if t is None
-        else (split_words(t), " ".join(split_words(t)))
+        else (split_words(t), " ".join(split_words(t)), _split_sentences_py(t))
         for i, t in ROWS
     }
     assert spark_rows == duck_rows == py_rows
-    assert py_rows[BASE_ID] == (["the", "alpha", "beta"], BASE)
+    assert py_rows[BASE_ID] == (["the", "alpha", "beta"], BASE, [BASE])
     assert all(py_rows[i] == py_rows[BASE_ID] for i in EDGE_IDS)
-    assert py_rows[ALL_WS_ID] == py_rows[EMPTY_ID] == ([], "")
+    assert py_rows[ALL_WS_ID] == py_rows[EMPTY_ID] == ([], "", [])
+    assert all(py_rows[i][2] == [t] for i, t in ROWS if i in LINE_SEP_IDS)

@@ -3,10 +3,9 @@
 environment (xdist is not installed).
 
 Splits ``tests/test_*.py`` across N worker processes (default 4), each
-with its OWN Python process, JVM/SparkSession, tmp basedir and Spark
-warehouse (``SPARK_GRAFT_TEST_SHARD`` — see tests/conftest.py), so
-managed-table and filesystem tests cannot collide. Every test file runs
-exactly once; the exit code is nonzero iff any shard fails.
+with its OWN Python process, JVM/SparkSession and tmp basedir, so
+filesystem tests cannot collide. Every test file runs exactly once; the
+exit code is nonzero iff any shard fails.
 
 File→shard assignment is greedy longest-processing-time over per-file
 costs LEARNED from the previous run: every shard runs with
@@ -132,7 +131,6 @@ def main() -> int:
     for i, shard in enumerate(shards):
         if not shard:
             continue
-        env = dict(os.environ, SPARK_GRAFT_TEST_SHARD=str(i))
         log = f"/tmp/partest_shard_{i}.log"
         fh = open(log, "w")
         procs.append(
@@ -149,7 +147,6 @@ def main() -> int:
                         *shard,
                     ],
                     cwd=REPO,
-                    env=env,
                     stdout=fh,
                     stderr=subprocess.STDOUT,
                 ),
